@@ -8,8 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * scale claim (/root/reference README.md:8: "millions of observations
  * and hundreds of thousands of constraints ... converged in minutes",
  * via sparse MKL + Pardiso). The repo's large-k path is a sparse-Gram
- * treeAggregate + Jacobi-preconditioned CG (EntropyBalance.scala /
- * EbwAggregator.runSparse / DriverLinalg.cgSolve); everything below
+ * treeAggregate + Jacobi-preconditioned CG (graft/ebw/EntropyBalance.scala:
+ * EbwAggregator.runSparse, DriverLinalg.cgSolve); everything below
  * `denseGramMax` = 512 was already spec- and bench-covered, so this
  * main sweeps the ASSERTED-but-unmeasured regime: N = 1e6-1e7 rows,
  * k = 1e3 / 1e4 / 1e5 constraints.

@@ -9,44 +9,29 @@ package graft.ebw
  */
 private[ebw] object DriverLinalg {
 
-  /** Solve (G + ridge*I) x = rhs where G is packed upper-triangular SPD-ish. */
-  def solveRidged(k: Int, packed: Array[Double], rhs: Array[Double], ridge0: Double): Array[Double] = {
-    val diag = new Array[Double](k)
-    solveWithDiag(k, packed, diag, rhs, ridge0)
-  }
+  /** THE Newton direction from a driver-merged pass: solves
+   * (sign*G + diag + ridge*I) d = rhs over the `free` coordinates (null =
+   * all; the others get d = 0) — ridge-escalating Cholesky on a packed
+   * Gram, preconditioned CG on a sparse one. */
+  def direction(
+      pass: EbwAggregator.Pass, k: Int, diag: Array[Double], rhs: Array[Double],
+      sign: Double, ridge: Double, free: Array[Boolean]): Array[Double] =
+    if (pass.isSparse) cgSolve(k, pass.gramKeys, pass.gramVals, diag, rhs, ridge, free, sign)
+    else cholesky(k, pass.gram, diag, rhs, ridge, free, sign)
 
-  /** Solve (G + diag + ridge*I) x = rhs (diag: extra per-coordinate diagonal,
-   * used by the penalty solver's (P^-1 + G) system). */
-  def solveWithDiag(
+  /** Solve (sign*G + diag + ridge*I) x = rhs on the `free` coordinates
+   * (null = all; zeros elsewhere), G packed upper-triangular SPD-ish;
+   * escalates the ridge 10x while the factorization fails. */
+  def cholesky(
       k: Int,
       packed: Array[Double],
       diag: Array[Double],
       rhs: Array[Double],
-      ridge0: Double): Array[Double] = {
-    var ridge = ridge0
-    var attempts = 0
-    while (attempts < 16) {
-      val a = unpack(k, packed)
-      var i = 0
-      while (i < k) { a(i)(i) += diag(i) + ridge; i += 1 }
-      val x = cholSolve(a, rhs)
-      if (x != null) return x
-      ridge = math.max(ridge, 1e-12) * 10.0
-      attempts += 1
-    }
-    throw new ArithmeticException("EBW Newton system is numerically singular")
-  }
-
-  /** Solve the subsystem restricted to `free` coordinates; zeros elsewhere. */
-  def solveSubset(
-      k: Int,
-      packed: Array[Double],
-      rhs: Array[Double],
-      free: Array[Int],
-      ridge0: Double): Array[Double] = {
-    val m = free.length
-    val out = new Array[Double](k)
-    if (m == 0) return out
+      ridge0: Double,
+      free: Array[Boolean] = null,
+      sign: Double = 1.0): Array[Double] = {
+    val idx = (0 until k).filter(i => free == null || free(i)).toArray
+    val m = idx.length
     var ridge = ridge0
     var attempts = 0
     while (attempts < 16) {
@@ -54,45 +39,29 @@ private[ebw] object DriverLinalg {
       val b = new Array[Double](m)
       var ii = 0
       while (ii < m) {
-        val gi = free(ii)
+        val gi = idx(ii)
         b(ii) = rhs(gi)
-        var jj = 0
+        var jj = ii
         while (jj < m) {
-          val gj = free(jj)
-          val lo = math.min(gi, gj)
-          val hi = math.max(gi, gj)
-          a(ii)(jj) = packed(EbwAggregator.pidx(k, lo, hi))
+          val v = sign * packed(EbwAggregator.pidx(k, gi, idx(jj)))
+          a(ii)(jj) = v
+          a(jj)(ii) = v
           jj += 1
         }
-        a(ii)(ii) += ridge
+        a(ii)(ii) += diag(gi) + ridge
         ii += 1
       }
       val x = cholSolve(a, b)
       if (x != null) {
+        val out = new Array[Double](k)
         var p = 0
-        while (p < m) { out(free(p)) = x(p); p += 1 }
+        while (p < m) { out(idx(p)) = x(p); p += 1 }
         return out
       }
       ridge = math.max(ridge, 1e-12) * 10.0
       attempts += 1
     }
-    throw new ArithmeticException("EBW Newton subsystem is numerically singular")
-  }
-
-  private def unpack(k: Int, packed: Array[Double]): Array[Array[Double]] = {
-    val a = Array.ofDim[Double](k, k)
-    var i = 0
-    while (i < k) {
-      var j = i
-      while (j < k) {
-        val v = packed(EbwAggregator.pidx(k, i, j))
-        a(i)(j) = v
-        a(j)(i) = v
-        j += 1
-      }
-      i += 1
-    }
-    a
+    throw new ArithmeticException("EBW Newton system is numerically singular")
   }
 
   /** In-place Cholesky solve; returns null if not positive definite. */
@@ -141,11 +110,12 @@ private[ebw] object DriverLinalg {
 
   /**
    * Jacobi-preconditioned conjugate gradient for the large-k regime:
-   * solve (G + diag + ridge*I) x = rhs where G is the SPARSE upper-tri Gram
-   * from EbwAggregator.runSparse (keys = i*k+j, i <= j). Plays the role of
-   * pypardiso.spsolve in the reference (ebw_routines.py:242-245) without
-   * needing a sparse direct factorization on the driver. `free` masks
-   * pinned coordinates (elastic box): masked rows/cols behave as identity.
+   * solve (sign*G + diag + ridge*I) x = rhs where G is the SPARSE upper-tri
+   * Gram from EbwAggregator.runSparse (keys = i*k+j, i <= j). Plays the
+   * role of pypardiso.spsolve in the reference (ebw_routines.py:242-245)
+   * without needing a sparse direct factorization on the driver. `free`
+   * masks pinned coordinates (elastic box): masked rows/cols behave as
+   * identity.
    */
   def cgSolve(
       k: Int,
@@ -154,36 +124,129 @@ private[ebw] object DriverLinalg {
       diag: Array[Double],
       rhs: Array[Double],
       ridge: Double,
-      free: Array[Boolean]): Array[Double] = {
+      free: Array[Boolean],
+      sign: Double = 1.0): Array[Double] = {
     val nnz = keys.length
-    @inline def isFree(i: Int): Boolean = free == null || free(i)
-    val precond = new Array[Double](k)
-    var i = 0
-    while (i < k) { precond(i) = diag(i) + ridge; i += 1 }
-    var p0 = 0
-    while (p0 < nnz) {
-      val key = keys(p0)
-      val ii = (key / k).toInt
-      if ((key % k).toInt == ii) precond(ii) += vals(p0)
-      p0 += 1
+    val gdiag = new Array[Double](k)
+    var p = 0
+    while (p < nnz) {
+      val key = keys(p)
+      val i = (key / k).toInt
+      if ((key % k).toInt == i) gdiag(i) += sign * vals(p)
+      p += 1
     }
-    i = 0
-    while (i < k) { if (precond(i) <= 0.0) precond(i) = math.max(ridge, 1e-12); i += 1 }
-
-    def mv(x: Array[Double]): Array[Double] = {
+    def gramMv(x: Array[Double]): Array[Double] = {
       val out = new Array[Double](k)
       var p = 0
       while (p < nnz) {
         val key = keys(p)
         val a = (key / k).toInt
         val b = (key % k).toInt
-        if (isFree(a) && isFree(b)) {
-          val v = vals(p)
+        if (free == null || (free(a) && free(b))) {
+          val v = sign * vals(p)
           out(a) += v * x(b)
           if (a != b) out(b) += v * x(a)
         }
         p += 1
       }
+      out
+    }
+    pcg(k, gdiag, gramMv, diag, rhs, ridge, free, 1e-12, math.min(2 * k + 20, 4000))
+  }
+
+  /**
+   * Jacobi-preconditioned CG with DISTRIBUTED matvecs — the
+   * no-driver-ceiling companion of [[cgSolve]] for the regime where the
+   * merged sparse Gram exceeds the driver budget (EbwSizing decides).
+   * `gram` is the upper-tri Gram as an RDD of (i*k+j, value), i <= j
+   * (EbwAggregator.gramRdd, caller-persisted). Each CG iteration
+   * broadcasts the k-vector p and tree-aggregates the k-vector G·p:
+   * driver traffic is O(k) per iteration regardless of Gram size. Each
+   * iteration is a Spark job, so it converges to Newton-inner accuracy
+   * (1e-10 relative, not 1e-12); the outer line search absorbs the
+   * difference.
+   *
+   * Math note: same PCG loop as cgSolve, but the partial-sum ORDER inside
+   * the distributed matvec differs from the driver loop, so results agree
+   * to fp-accumulation tolerance, not bit-exactly — the parity spec
+   * asserts 1e-8 relative agreement.
+   */
+  def cgSolveRdd(
+      gram: org.apache.spark.rdd.RDD[(Long, Double)],
+      k: Int,
+      diag: Array[Double],
+      rhs: Array[Double],
+      ridge: Double,
+      free: Array[Boolean],
+      sign: Double = 1.0,
+      maxIterOverride: Int = 0): Array[Double] = {
+    val sc = gram.sparkContext
+    // Jacobi preconditioner: Gram diagonal in ONE aggregation pass
+    val gdiag = gram.treeAggregate(new Array[Double](k))(
+      seqOp = (buf, kv) => {
+        val i = (kv._1 / k).toInt
+        if ((kv._1 % k).toInt == i) buf(i) += sign * kv._2
+        buf
+      },
+      combOp = EbwAggregator.addArrays,
+      depth = 2)
+    val freeBc = if (free == null) null else sc.broadcast(free)
+
+    def gramMv(x: Array[Double]): Array[Double] = {
+      val xb = sc.broadcast(x)
+      try gram.treeAggregate(new Array[Double](k))(
+          seqOp = (buf, kv) => {
+            val key = kv._1
+            val a = (key / k).toInt
+            val b = (key % k).toInt
+            if (freeBc == null || (freeBc.value(a) && freeBc.value(b))) {
+              val v = sign * kv._2
+              val xv = xb.value
+              buf(a) += v * xv(b)
+              if (a != b) buf(b) += v * xv(a)
+            }
+            buf
+          },
+          combOp = EbwAggregator.addArrays,
+          depth = 2)
+      finally xb.destroy()
+    }
+
+    val maxIter =
+      if (maxIterOverride > 0) maxIterOverride else math.min(2 * k + 20, 1000)
+    try pcg(k, gdiag, gramMv, diag, rhs, ridge, free, 1e-10, maxIter)
+    finally if (freeBc != null) freeBc.destroy()
+  }
+
+  /**
+   * THE preconditioned CG loop behind [[cgSolve]] and [[cgSolveRdd]]:
+   * solves (G' + diag + ridge*I) x = rhs on the free coordinates, where
+   * `gramMv(x)` returns G'x over free pairs and `gdiag` is diag(G'); pinned
+   * rows/cols behave as identity. Stops at relative residual `tol` or
+   * `maxIter` iterations. A capped (or breakdown-truncated) exit returns a
+   * PARTIALLY converged Newton direction — legal (the outer line search
+   * absorbs it) but logged, so persistent hits point back here.
+   */
+  private def pcg(
+      k: Int,
+      gdiag: Array[Double],
+      gramMv: Array[Double] => Array[Double],
+      diag: Array[Double],
+      rhs: Array[Double],
+      ridge: Double,
+      free: Array[Boolean],
+      tol: Double,
+      maxIter: Int): Array[Double] = {
+    @inline def isFree(i: Int): Boolean = free == null || free(i)
+    val precond = new Array[Double](k)
+    var i = 0
+    while (i < k) {
+      precond(i) = diag(i) + ridge + gdiag(i)
+      if (precond(i) <= 0.0) precond(i) = math.max(ridge, 1e-12)
+      i += 1
+    }
+    def mv(x: Array[Double]): Array[Double] = {
+      val out = gramMv(x)
       var q = 0
       while (q < k) {
         if (isFree(q)) out(q) += (diag(q) + ridge) * x(q) else out(q) = x(q)
@@ -191,21 +254,19 @@ private[ebw] object DriverLinalg {
       }
       out
     }
-
     val b = rhs.clone()
     i = 0
     while (i < k) { if (!isFree(i)) b(i) = 0.0; i += 1 }
     val x = new Array[Double](k)
-    var r = b.clone()
+    val r = b.clone()
     val z = new Array[Double](k)
     i = 0
     while (i < k) { z(i) = r(i) / precond(i); i += 1 }
-    var p = z.clone()
+    val p = z.clone()
     var rz = dot(r, z)
     val bnorm = math.max(norm2(b), 1e-300)
     var iter = 0
-    val maxIter = math.min(2 * k + 20, 4000)
-    while (iter < maxIter && norm2(r) > 1e-12 * bnorm) {
+    while (iter < maxIter && norm2(r) > tol * bnorm) {
       val ap = mv(p)
       val pap = dot(p, ap)
       if (pap <= 0.0 || pap.isNaN) {
@@ -224,138 +285,13 @@ private[ebw] object DriverLinalg {
         iter += 1
       }
     }
+    val rn = norm2(r)
+    if (rn > tol * bnorm)
+      EbwLog.warn(f"CG stopped at iter=$iter/$maxIter with relative residual " +
+        f"${rn / bnorm}%.3e > $tol%.0e (k=$k): Newton direction partially " +
+        "converged; the outer line search absorbs it, but persistent hits " +
+        "mean an ill-conditioned moment system")
     x
-  }
-
-  /**
-   * Jacobi-preconditioned CG with DISTRIBUTED matvecs — the
-   * no-driver-ceiling companion of [[cgSolve]] for the regime where the
-   * merged sparse Gram exceeds the driver budget (EbwSizing decides).
-   * `gram` is the upper-tri Gram as an RDD of (i*k+j, value), i <= j
-   * (EbwAggregator.gramRdd, caller-persisted). Each CG iteration
-   * broadcasts the k-vector p and tree-aggregates the k-vector G·p:
-   * driver traffic is O(k) per iteration regardless of Gram size.
-   * `sign` scales the Gram (+1 normal; -1 for the penalty system whose
-   * aggregated dS/dz = -G). Masked (`free`) coordinates behave as
-   * identity rows, as in cgSolve.
-   *
-   * Math note: identical update sequence to cgSolve, but the partial-sum
-   * ORDER inside the distributed matvec differs from the driver loop, so
-   * results agree to fp-accumulation tolerance, not bit-exactly — the
-   * parity spec asserts 1e-8 relative agreement.
-   */
-  def cgSolveRdd(
-      gram: org.apache.spark.rdd.RDD[(Long, Double)],
-      k: Int,
-      diag: Array[Double],
-      rhs: Array[Double],
-      ridge: Double,
-      free: Array[Boolean],
-      sign: Double = 1.0,
-      maxIterOverride: Int = 0): Array[Double] = {
-    val sc = gram.sparkContext
-    @inline def isFree(i: Int): Boolean = free == null || free(i)
-    val kk = k
-    val sg = sign
-    // Jacobi preconditioner: Gram diagonal in ONE aggregation pass
-    val gdiag = gram.treeAggregate(new Array[Double](kk))(
-      seqOp = (buf, kv) => {
-        val i = (kv._1 / kk).toInt
-        if ((kv._1 % kk).toInt == i) buf(i) += sg * kv._2
-        buf
-      },
-      combOp = (a, b) => { var i = 0; while (i < kk) { a(i) += b(i); i += 1 }; a },
-      depth = 2)
-    val precond = new Array[Double](k)
-    var i = 0
-    while (i < k) {
-      precond(i) = gdiag(i) + diag(i) + ridge
-      if (precond(i) <= 0.0) precond(i) = math.max(ridge, 1e-12)
-      i += 1
-    }
-    val freeBc = if (free == null) null else sc.broadcast(free)
-
-    def mv(x: Array[Double]): Array[Double] = {
-      val xb = sc.broadcast(x)
-      try {
-        val gx = gram.treeAggregate(new Array[Double](kk))(
-          seqOp = (buf, kv) => {
-            val key = kv._1
-            val a = (key / kk).toInt
-            val b = (key % kk).toInt
-            val fa = if (freeBc == null) true else freeBc.value(a)
-            val fb = if (freeBc == null) true else freeBc.value(b)
-            if (fa && fb) {
-              val v = sg * kv._2
-              val xv = xb.value
-              buf(a) += v * xv(b)
-              if (a != b) buf(b) += v * xv(a)
-            }
-            buf
-          },
-          combOp = (a, b) => { var i = 0; while (i < kk) { a(i) += b(i); i += 1 }; a },
-          depth = 2)
-        var q = 0
-        while (q < kk) {
-          if (isFree(q)) gx(q) += (diag(q) + ridge) * x(q) else gx(q) = x(q)
-          q += 1
-        }
-        gx
-      } finally xb.destroy()
-    }
-
-    try {
-      val b = rhs.clone()
-      i = 0
-      while (i < k) { if (!isFree(i)) b(i) = 0.0; i += 1 }
-      val x = new Array[Double](k)
-      val r = b.clone()
-      val z = new Array[Double](k)
-      i = 0
-      while (i < k) { z(i) = r(i) / precond(i); i += 1 }
-      var p = z.clone()
-      var rz = dot(r, z)
-      val bnorm = math.max(norm2(b), 1e-300)
-      var iter = 0
-      // each iteration is a Spark job: converge to Newton-inner accuracy
-      // (1e-10 relative), not the driver loop's 1e-12 — the outer Newton
-      // line-search absorbs the difference
-      val maxIter =
-        if (maxIterOverride > 0) maxIterOverride
-        else math.min(2 * k + 20, 1000)
-      while (iter < maxIter && norm2(r) > 1e-10 * bnorm) {
-        val ap = mv(p)
-        val pap = dot(p, ap)
-        if (pap <= 0.0 || pap.isNaN) {
-          iter = maxIter
-        } else {
-          val alpha = rz / pap
-          var j = 0
-          while (j < k) { x(j) += alpha * p(j); r(j) -= alpha * ap(j); j += 1 }
-          j = 0
-          while (j < k) { z(j) = r(j) / precond(j); j += 1 }
-          val rzNew = dot(r, z)
-          val beta = rzNew / rz
-          rz = rzNew
-          j = 0
-          while (j < k) { p(j) = z(j) + beta * p(j); j += 1 }
-          iter += 1
-        }
-      }
-      // A capped (or breakdown-truncated) exit returns a PARTIALLY
-      // converged Newton direction — legal (the outer line search
-      // absorbs it) but it must be diagnosable at N=1e7 scale, not
-      // silent: without this line the only symptom is slower/failed
-      // OUTER convergence with no pointer back here.
-      val rn = norm2(r)
-      if (rn > 1e-10 * bnorm) {
-        EbwLog.warn(f"cgSolveRdd stopped at iter=$iter/$maxIter with " +
-          f"relative residual ${rn / bnorm}%.3e > 1e-10 (k=$k): Newton " +
-          "direction partially converged; outer line search will absorb " +
-          "it, but persistent hits mean an ill-conditioned moment system")
-      }
-      x
-    } finally if (freeBc != null) freeBc.destroy()
   }
 
   @inline def dot(a: Array[Double], b: Array[Double]): Double = {

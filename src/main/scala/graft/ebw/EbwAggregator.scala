@@ -1,22 +1,35 @@
 package graft.ebw
 
+import scala.collection.mutable.LongMap
+
 import org.apache.spark.rdd.RDD
 
 /**
- * The single distributed kernel behind every solver mode: one
- * `treeAggregate` traversal computes, for the current k-dim dual iterate
- * theta,
+ * The one distributed row kernel behind every solver mode. Per row it
+ * takes one step, (r, r') = link.rAndSlope(x . theta) ([[eval]]), and
+ * folds the row into one of two sinks, each writing at a caller-given
+ * base offset so a caller can stack blocks (the grouped round pass keeps
+ * one block per group):
  *
- *   s    = sum_i w0_i r_i x_i                  (k)      weighted moment totals
- *   gram = sum_i w0_i r'_i x_i x_i^T           (k(k+1)/2, packed upper tri)
- *   fval = sum_i w0_i (r_i ln r_i - r_i + 1)   KL criterion (shared.py:41-54)
- *   wrsum= sum_i w0_i r_i
+ *   packed  ([[addPacked]])  s_i += w0 r x_i at buf(sOff + i),
+ *           gram += w0 r' x_i x_j at buf(gOff + pidx(k, i, j))
+ *   LongMap ([[addSparse]])  s_i += w0 r x_i at s(sOff + i),
+ *           gram(keyBase + i*k + j) += w0 r' x_i x_j, i <= j
  *
- * where r_i = link(x_i . theta). This is the same access pattern the
- * reference implements with MKL sparse matvecs + gram_matrix_mkl
- * (ebw_routines.py:211,226-233) — here it distributes over the N dimension
- * with O(k^2) driver traffic per pass and zero shuffles (treeAggregate is a
- * reduction). Buffers are flat primitive arrays: no per-row allocation.
+ * plus the statistics tail ([[addStats]])
+ *
+ *   fval  = sum_i w0_i (r_i ln r_i - r_i + 1)   KL criterion (shared.py:41-54)
+ *   wrsum = sum_i w0_i r_i
+ *
+ * The packed Gram suits k <= denseGramMax; the LongMap stays proportional
+ * to the realized cross pattern for large-k group-dummy designs. This is
+ * the reference's MKL sparse matvec + gram_matrix_mkl access pattern
+ * (ebw_routines.py:211,226-233), distributed over N with O(k^2) driver
+ * traffic per pass and zero shuffles (treeAggregate is a reduction).
+ * [[run]], [[runSparse]], [[gramRdd]], [[ratioSeed]] and
+ * GroupedEntropyBalance's round pass are thin drivers over these sinks;
+ * every slot receives the same additions in the same row order whichever
+ * driver runs it, so results match bit for bit across drivers.
  */
 private[ebw] object EbwAggregator {
 
@@ -25,7 +38,6 @@ private[ebw] object EbwAggregator {
       gram: Array[Double],
       fval: Double,
       wrsum: Double,
-      count: Long,
       gramKeys: Array[Long] = null,
       gramVals: Array[Double] = null) {
     def isSparse: Boolean = gramKeys != null
@@ -34,37 +46,10 @@ private[ebw] object EbwAggregator {
   /** Packed upper-triangular index for i <= j. */
   @inline def pidx(k: Int, i: Int, j: Int): Int = i * k - i * (i + 1) / 2 + j
 
-  def run(rows: RDD[EbwRow], k: Int, theta: Array[Double], link: Link): Pass = {
-    val tri = k * (k + 1) / 2
-    val size = k + tri + 3
-    val th = theta
-    val lk = link
-    val out = rows.treeAggregate(new Array[Double](size))(
-      seqOp = (buf, row) => { add(buf, row, th, lk, k, tri); buf },
-      combOp = (a, b) => {
-        var i = 0
-        while (i < size) { a(i) += b(i); i += 1 }
-        a
-      },
-      depth = 2)
-    Pass(
-      s = java.util.Arrays.copyOfRange(out, 0, k),
-      gram = java.util.Arrays.copyOfRange(out, k, k + tri),
-      fval = out(k + tri),
-      wrsum = out(k + tri + 1),
-      count = out(k + tri + 2).toLong)
-  }
-
-  private def add(
-      buf: Array[Double],
-      row: EbwRow,
-      theta: Array[Double],
-      link: Link,
-      k: Int,
-      tri: Int): Unit = {
+  /** (r, dr/dt) at t = x . theta. */
+  @inline def eval(row: EbwRow, theta: Array[Double], link: Link, k: Int): (Double, Double) = {
     val vals = row.vals
     val idx = row.idx
-    // t = x . theta
     var t = 0.0
     if (idx == null) {
       var j = 0
@@ -73,22 +58,30 @@ private[ebw] object EbwAggregator {
       var p = 0
       while (p < idx.length) { t += vals(p) * theta(idx(p)); p += 1 }
     }
-    val (r, rp) = link.rAndSlope(t)
-    val w0 = row.w0
-    val wr = w0 * r
+    link.rAndSlope(t)
+  }
+
+  /** fval and wrsum at buf(off), buf(off + 1). */
+  @inline def addStats(buf: Array[Double], off: Int, w0: Double, r: Double): Unit = {
     // KL criterion term; r -> 0 limit of (r ln r - r + 1) is 1.
-    buf(k + tri) += (if (r <= 0.0) w0 else w0 * (r * math.log(r) - r + 1.0))
-    buf(k + tri + 1) += wr
-    buf(k + tri + 2) += 1.0
-    val wrp = w0 * rp
+    buf(off) += (if (r <= 0.0) w0 else w0 * (r * math.log(r) - r + 1.0))
+    buf(off + 1) += w0 * r
+  }
+
+  /** Packed sink: s_i += wr x_i at buf(sOff + i) and, when wrp != 0,
+   * the upper-triangular Gram wrp x x' at buf(gOff + pidx(k, i, j)). */
+  @inline def addPacked(buf: Array[Double], sOff: Int, gOff: Int,
+      row: EbwRow, k: Int, wr: Double, wrp: Double): Unit = {
+    val vals = row.vals
+    val idx = row.idx
     if (idx == null) {
       var i = 0
       while (i < k) {
         val vi = vals(i)
-        buf(i) += wr * vi
+        buf(sOff + i) += wr * vi
         if (wrp != 0.0 && vi != 0.0) {
           val wv = wrp * vi
-          val base = k + i * k - i * (i + 1) / 2
+          val base = gOff + pidx(k, i, 0)
           var j = i
           while (j < k) { buf(base + j) += wv * vals(j); j += 1 }
         }
@@ -100,10 +93,10 @@ private[ebw] object EbwAggregator {
       while (p < nnz) {
         val i = idx(p)
         val vi = vals(p)
-        buf(i) += wr * vi
+        buf(sOff + i) += wr * vi
         if (wrp != 0.0) {
           val wv = wrp * vi
-          val base = k + i * k - i * (i + 1) / 2
+          val base = gOff + pidx(k, i, 0)
           var q = p
           while (q < nnz) { buf(base + idx(q)) += wv * vals(q); q += 1 }
         }
@@ -112,221 +105,129 @@ private[ebw] object EbwAggregator {
     }
   }
 
-  /**
-   * Large-k variant: identical statistics, but the Gram is accumulated as
-   * a sparse LongMap keyed by i*k+j (i <= j). For group-dummy / interaction
-   * designs (the reference's "hundreds of thousands of constraints" regime,
-   * README.md "models with ... hundreds of thousands of constraints") the
-   * Gram has O(k) to O(k * nnz_row) entries, not k^2 — a packed dense
-   * buffer would be 100 MB+/task at k = 5000 while the sparse map stays
-   * proportional to the realized cross pattern. Paired with the driver-side
-   * CG solve in DriverLinalg.
-   */
-  def runSparse(rows: RDD[EbwRow], k: Int, theta: Array[Double], link: Link,
-      depth: Int = 2): Pass = {
-    val th = theta
-    val lk = link
-    final case class Acc(
-        s: Array[Double],
-        gram: scala.collection.mutable.LongMap[Double],
-        var fval: Double, var wrsum: Double, var count: Long)
-    val out = rows.treeAggregate(
-      Acc(new Array[Double](k), new scala.collection.mutable.LongMap[Double](), 0.0, 0.0, 0L))(
-      seqOp = (acc, row) => {
-        val vals = row.vals
-        val idx = row.idx
-        var t = 0.0
-        if (idx == null) {
-          var j = 0
-          while (j < k) { t += vals(j) * th(j); j += 1 }
-        } else {
-          var p = 0
-          while (p < idx.length) { t += vals(p) * th(idx(p)); p += 1 }
-        }
-        val (r, rp) = lk.rAndSlope(t)
-        val w0 = row.w0
-        val wr = w0 * r
-        acc.fval += (if (r <= 0.0) w0 else w0 * (r * math.log(r) - r + 1.0))
-        acc.wrsum += wr
-        acc.count += 1
-        val wrp = w0 * rp
-        if (idx == null) {
-          var i = 0
-          while (i < k) {
-            val vi = vals(i)
-            if (vi != 0.0) {
-              acc.s(i) += wr * vi
-              if (wrp != 0.0) {
-                val wv = wrp * vi
-                var j = i
-                while (j < k) {
-                  val vj = vals(j)
-                  if (vj != 0.0) {
-                    val key = i.toLong * k + j
-                    acc.gram.update(key, acc.gram.getOrElse(key, 0.0) + wv * vj)
-                  }
-                  j += 1
-                }
+  /** LongMap sink: s_i += wr x_i at s(sOff + i) (s may be null: Gram
+   * only) and, when wrp != 0, gram(keyBase + i*k + j) += wrp x_i x_j. */
+  @inline def addSparse(s: Array[Double], sOff: Int, gram: LongMap[Double],
+      keyBase: Long, row: EbwRow, k: Int, wr: Double, wrp: Double): Unit = {
+    val vals = row.vals
+    val idx = row.idx
+    if (idx == null) {
+      var i = 0
+      while (i < k) {
+        val vi = vals(i)
+        if (vi != 0.0) {
+          if (s != null) s(sOff + i) += wr * vi
+          if (wrp != 0.0) {
+            val wv = wrp * vi
+            var j = i
+            while (j < k) {
+              val vj = vals(j)
+              if (vj != 0.0) {
+                val key = keyBase + i.toLong * k + j
+                gram.update(key, gram.getOrElse(key, 0.0) + wv * vj)
               }
+              j += 1
             }
-            i += 1
-          }
-        } else {
-          val nnz = idx.length
-          var p = 0
-          while (p < nnz) {
-            val i = idx(p)
-            val vi = vals(p)
-            acc.s(i) += wr * vi
-            if (wrp != 0.0) {
-              val wv = wrp * vi
-              var q = p
-              while (q < nnz) {
-                val key = i.toLong * k + idx(q)
-                acc.gram.update(key, acc.gram.getOrElse(key, 0.0) + wv * vals(q))
-                q += 1
-              }
-            }
-            p += 1
           }
         }
-        acc
-      },
-      combOp = (a, b) => {
-        var i = 0
-        while (i < k) { a.s(i) += b.s(i); i += 1 }
-        b.gram.foreachEntry((key, v) => a.gram.update(key, a.gram.getOrElse(key, 0.0) + v))
-        a.fval += b.fval; a.wrsum += b.wrsum; a.count += b.count
-        a
-      },
-      depth = depth)
-    val n = out.gram.size
-    val keys = new Array[Long](n)
-    val vals = new Array[Double](n)
-    var i = 0
-    out.gram.foreachEntry { (key, v) => keys(i) = key; vals(i) = v; i += 1 }
-    Pass(out.s, null, out.fval, out.wrsum, out.count, keys, vals)
+        i += 1
+      }
+    } else {
+      val nnz = idx.length
+      var p = 0
+      while (p < nnz) {
+        val i = idx(p)
+        val vi = vals(p)
+        if (s != null) s(sOff + i) += wr * vi
+        if (wrp != 0.0) {
+          val wv = wrp * vi
+          var q = p
+          while (q < nnz) {
+            val key = keyBase + i.toLong * k + idx(q)
+            gram.update(key, gram.getOrElse(key, 0.0) + wv * vals(q))
+            q += 1
+          }
+        }
+        p += 1
+      }
+    }
   }
 
-  /**
-   * Statistics-only pass: s, fval, wrsum, count — NO Gram. Θ(N·nnz)
-   * instead of Θ(N·nnz²). The distributed-Gram mode's line-search
-   * evaluation: Armijo trials only need the dual objective pieces, so the
-   * Gram (the expensive part) is built once per ACCEPTED iterate, not per
-   * trial.
-   */
-  def runStats(rows: RDD[EbwRow], k: Int, theta: Array[Double], link: Link): Pass = {
-    val th = theta
-    val lk = link
-    val size = k + 3
-    val out = rows.treeAggregate(new Array[Double](size))(
+  def addArrays(a: Array[Double], b: Array[Double]): Array[Double] = {
+    var i = 0
+    while (i < a.length) { a(i) += b(i); i += 1 }
+    a
+  }
+
+  def addMaps(a: LongMap[Double], b: LongMap[Double]): LongMap[Double] = {
+    b.foreachEntry((key, v) => a.update(key, a.getOrElse(key, 0.0) + v))
+    a
+  }
+
+  /** Packed pass: s, fval, wrsum and, unless `withGram` is false,
+   * the packed Gram. The Gram-free pass is Θ(N·nnz) instead of
+   * Θ(N·nnz²): the distributed-Gram mode's line-search passes and
+   * `evaluate` need only the dual objective pieces. */
+  def run(rows: RDD[EbwRow], k: Int, theta: Array[Double], link: Link,
+      withGram: Boolean = true): Pass = {
+    val tri = if (withGram) k * (k + 1) / 2 else 0
+    val out = rows.treeAggregate(new Array[Double](k + tri + 2))(
       seqOp = (buf, row) => {
-        val vals = row.vals
-        val idx = row.idx
-        var t = 0.0
-        if (idx == null) {
-          var j = 0
-          while (j < k) { t += vals(j) * th(j); j += 1 }
-        } else {
-          var p = 0
-          while (p < idx.length) { t += vals(p) * th(idx(p)); p += 1 }
-        }
-        val (r, _) = lk.rAndSlope(t)
-        val w0 = row.w0
-        val wr = w0 * r
-        buf(k) += (if (r <= 0.0) w0 else w0 * (r * math.log(r) - r + 1.0))
-        buf(k + 1) += wr
-        buf(k + 2) += 1.0
-        if (idx == null) {
-          var i = 0
-          while (i < k) { buf(i) += wr * vals(i); i += 1 }
-        } else {
-          var p = 0
-          while (p < idx.length) { buf(idx(p)) += wr * vals(p); p += 1 }
-        }
+        val (r, rp) = eval(row, theta, link, k)
+        addPacked(buf, 0, k, row, k, row.w0 * r, if (withGram) row.w0 * rp else 0.0)
+        addStats(buf, k + tri, row.w0, r)
         buf
       },
-      combOp = (a, b) => {
-        var i = 0
-        while (i < size) { a(i) += b(i); i += 1 }
-        a
-      },
+      combOp = addArrays,
       depth = 2)
     Pass(
       s = java.util.Arrays.copyOfRange(out, 0, k),
-      gram = null,
-      fval = out(k),
-      wrsum = out(k + 1),
-      count = out(k + 2).toLong)
+      gram = if (withGram) java.util.Arrays.copyOfRange(out, k, k + tri) else null,
+      fval = out(k + tri),
+      wrsum = out(k + tri + 1))
+  }
+
+  /** Large-k pass: the statistics of [[run]] with the Gram as a LongMap
+   * keyed by i*k+j (i <= j). For group-dummy / interaction designs (the
+   * reference's "hundreds of thousands of constraints" regime) the Gram
+   * has O(k) to O(k * nnz_row) entries, not k^2 — a packed buffer would
+   * be 100 MB+/task at k = 5000. Paired with the driver-side CG solve. */
+  def runSparse(rows: RDD[EbwRow], k: Int, theta: Array[Double], link: Link,
+      depth: Int = 2): Pass = {
+    val (stats, gram) = rows.treeAggregate((new Array[Double](k + 2), new LongMap[Double]()))(
+      seqOp = (acc, row) => {
+        val (r, rp) = eval(row, theta, link, k)
+        addSparse(acc._1, 0, acc._2, 0L, row, k, row.w0 * r, row.w0 * rp)
+        addStats(acc._1, k, row.w0, r)
+        acc
+      },
+      combOp = (a, b) => { addArrays(a._1, b._1); addMaps(a._2, b._2); a },
+      depth = depth)
+    val keys = new Array[Long](gram.size)
+    val vals = new Array[Double](gram.size)
+    var i = 0
+    gram.foreachEntry { (key, v) => keys(i) = key; vals(i) = v; i += 1 }
+    Pass(java.util.Arrays.copyOfRange(stats, 0, k), null, stats(k), stats(k + 1),
+      keys, vals)
   }
 
   /**
    * The Gram as a DISTRIBUTED dataset — the no-driver-ceiling mode for
    * the large-N × large-k regime (EbwSizing decides): per-partition
-   * LongMap partials (the runSparse kernel) stream out as (key, value)
-   * pairs and a reduceByKey merges them ACROSS EXECUTORS; the merged Gram
-   * never lands on the driver. The Newton direction is then solved by CG
-   * with distributed matvecs (DriverLinalg.cgSolveRdd) — per-iteration
-   * driver traffic is O(k), not O(gram nnz), so the regime that OOMed the
-   * default 8 GB driver (N=1e7: ~50 M realized Gram entries) runs within
-   * default budgets. Caller persists/unpersists the returned RDD.
+   * LongMap partials stream out as (key, value) pairs and a reduceByKey
+   * merges them ACROSS EXECUTORS; the merged Gram never lands on the
+   * driver. The Newton direction is then solved by CG with distributed
+   * matvecs (DriverLinalg.cgSolveRdd) — per-iteration driver traffic is
+   * O(k), not O(gram nnz). Caller persists/unpersists the returned RDD.
    */
   def gramRdd(rows: RDD[EbwRow], k: Int, theta: Array[Double], link: Link,
-      aggParts: Int): RDD[(Long, Double)] = {
-    val th = theta
-    val lk = link
+      aggParts: Int): RDD[(Long, Double)] =
     rows.mapPartitions { it =>
-      val acc = new scala.collection.mutable.LongMap[Double]()
+      val acc = new LongMap[Double]()
       while (it.hasNext) {
         val row = it.next()
-        val vals = row.vals
-        val idx = row.idx
-        var t = 0.0
-        if (idx == null) {
-          var j = 0
-          while (j < k) { t += vals(j) * th(j); j += 1 }
-        } else {
-          var p = 0
-          while (p < idx.length) { t += vals(p) * th(idx(p)); p += 1 }
-        }
-        val (_, rp) = lk.rAndSlope(t)
-        val wrp = row.w0 * rp
-        if (wrp != 0.0) {
-          if (idx == null) {
-            var i = 0
-            while (i < k) {
-              val vi = vals(i)
-              if (vi != 0.0) {
-                val wv = wrp * vi
-                var j = i
-                while (j < k) {
-                  val vj = vals(j)
-                  if (vj != 0.0) {
-                    val key = i.toLong * k + j
-                    acc.update(key, acc.getOrElse(key, 0.0) + wv * vj)
-                  }
-                  j += 1
-                }
-              }
-              i += 1
-            }
-          } else {
-            val nnz = idx.length
-            var p = 0
-            while (p < nnz) {
-              val vi = vals(p)
-              val wv = wrp * vi
-              val i = idx(p)
-              var q = p
-              while (q < nnz) {
-                val key = i.toLong * k + idx(q)
-                acc.update(key, acc.getOrElse(key, 0.0) + wv * vals(q))
-                q += 1
-              }
-              p += 1
-            }
-          }
-        }
+        val (_, rp) = eval(row, theta, link, k)
+        addSparse(null, 0, acc, 0L, row, k, 0.0, row.w0 * rp)
       }
       acc.iterator
     }.combineByKeyWithClassTag[Double](
@@ -343,113 +244,74 @@ private[ebw] object EbwAggregator {
       // shuffle writers costs zero extra shuffle volume and caps task
       // memory at the one partial.
       mapSideCombine = false)
-  }
 
   /**
    * One-pass weighted least squares for the primal warm start: solves
    * (sum w0 x x') lambda = sum w0 x ln(r0) — the projection of the log
-   * ratio guess onto span(X). Returns (packed gram, rhs). Rows with
+   * ratio guess onto span(X) — via the packed sink with wr = w0 ln(r0),
+   * wrp = w0. Returns (packed gram, rhs). Invalid rows and rows with
    * non-finite or nonpositive ratios are skipped: the guess is only a
    * seed, never a correctness input.
    */
   def ratioSeed(rows: RDD[(EbwRow, Double)], k: Int): (Array[Double], Array[Double]) = {
     val tri = k * (k + 1) / 2
-    val size = tri + k
-    val out = rows.treeAggregate(new Array[Double](size))(
+    val out = rows.treeAggregate(new Array[Double](tri + k))(
       seqOp = (buf, rowAndRatio) => {
         val (row, ratio) = rowAndRatio
-        // defensive dimension guards: the solver validates the same frame
-        // separately, but this pass must never AIOOBE on its own
-        val dimsOk = row.vals != null && (
-          if (row.idx == null) row.vals.length == k
-          else row.idx.length == row.vals.length && (row.idx.length == 0 ||
-            (row.idx(0) >= 0 && row.idx(row.idx.length - 1) < k)))
-        if (ratio > 0.0 && !ratio.isInfinite && !ratio.isNaN &&
-            dimsOk && !row.w0.isNaN && row.w0 > 0.0) {
-          val lnr = math.log(ratio)
-          val w0 = row.w0
-          val vals = row.vals
-          val idx = row.idx
-          if (idx == null) {
-            var i = 0
-            while (i < k) {
-              val vi = vals(i)
-              if (vi != 0.0) {
-                buf(tri + i) += w0 * lnr * vi
-                val wv = w0 * vi
-                val base = i * k - i * (i + 1) / 2
-                var j = i
-                while (j < k) { buf(base + j) += wv * vals(j); j += 1 }
-              }
-              i += 1
-            }
-          } else {
-            val nnz = idx.length
-            var p = 0
-            while (p < nnz) {
-              val i = idx(p)
-              val vi = vals(p)
-              buf(tri + i) += w0 * lnr * vi
-              val wv = w0 * vi
-              val base = i * k - i * (i + 1) / 2
-              var q = p
-              while (q < nnz) { buf(base + idx(q)) += wv * vals(q); q += 1 }
-              p += 1
-            }
-          }
-        }
+        if (ratio > 0.0 && !ratio.isInfinite && rowNnz(row, k) >= 0)
+          addPacked(buf, tri, 0, row, k, row.w0 * math.log(ratio), row.w0)
         buf
       },
-      combOp = (a, b) => {
-        var i = 0
-        while (i < size) { a(i) += b(i); i += 1 }
-        a
-      },
+      combOp = addArrays,
       depth = 2)
     (java.util.Arrays.copyOfRange(out, 0, tri),
-      java.util.Arrays.copyOfRange(out, tri, size))
+      java.util.Arrays.copyOfRange(out, tri, tri + k))
   }
 
-  /** Validation + sizing pass: returns (badRows, sumW, n, sumPairs) where
-   * sumPairs = Σ_i nnz_i(nnz_i+1)/2 — the total Gram-entry contributions,
-   * the input to EbwSizing's partition/depth/mode heuristic (counted in
-   * the same scan that checks finiteness, so sizing costs nothing extra).
-   * Mirrors inputs_are_invalid
+  /** The row-validity check: the row's nonzero count, or -1 when the
+   * weight is not finite and positive, the shape does not fit k, or a
+   * value is not finite. Mirrors inputs_are_invalid
    * (/root/reference/entropy_balance_weighting/shared.py:105-133). */
-  def validate(rows: RDD[EbwRow], k: Int): (Long, Double, Long, Long) = {
-    val out = rows.treeAggregate(new Array[Double](4))(
+  def rowNnz(row: EbwRow, k: Int): Int = {
+    val vals = row.vals
+    val idx = row.idx
+    if (row.w0.isNaN || row.w0.isInfinite || row.w0 <= 0.0 || vals == null) return -1
+    if (idx == null) { if (vals.length != k) return -1 }
+    else if (idx.length != vals.length ||
+        (idx.length > 0 && (idx(idx.length - 1) >= k || idx(0) < 0))) return -1
+    var nnz = 0
+    var p = 0
+    while (p < vals.length) {
+      val v = vals(p)
+      if (v.isNaN || v.isInfinite) return -1
+      if (v != 0.0) nnz += 1
+      p += 1
+    }
+    nnz
+  }
+
+  final case class Validated(bad: Long, sumW: Array[Double], n: Long, sumPairs: Long)
+
+  /** Validation + sizing pass over rows of `nG` groups (row.g): invalid
+   * row count, per-group sumW, row count and sumPairs =
+   * Σ_i nnz_i(nnz_i+1)/2 — the total Gram-entry contributions, the input
+   * to EbwSizing's partition/depth/placement heuristic (counted in the
+   * same scan that checks the rows, so sizing costs nothing extra). */
+  def validate(rows: RDD[EbwRow], k: Int, nG: Int = 1): Validated = {
+    val out = rows.treeAggregate(new Array[Double](nG + 3))(
       seqOp = (buf, row) => {
-        var bad = false
-        var nnz = 0
-        if (row.w0.isNaN || row.w0.isInfinite || row.w0 <= 0.0) bad = true
-        if (row.vals == null) bad = true
+        val nnz = rowNnz(row, k)
+        if (nnz < 0) buf(nG) += 1.0
         else {
-          if (row.idx == null) {
-            if (row.vals.length != k) bad = true
-          } else {
-            if (row.idx.length != row.vals.length) bad = true
-            else if (row.idx.length > 0 && (row.idx(row.idx.length - 1) >= k || row.idx(0) < 0)) bad = true
-          }
-          if (!bad) {
-            var p = 0
-            while (p < row.vals.length && !bad) {
-              val v = row.vals(p)
-              if (v.isNaN || v.isInfinite) bad = true
-              else if (v != 0.0) nnz += 1
-              p += 1
-            }
-          }
+          buf(row.g) += row.w0
+          buf(nG + 2) += nnz.toDouble * (nnz + 1) / 2
         }
-        if (bad) buf(0) += 1.0
-        else {
-          buf(1) += row.w0
-          buf(3) += nnz.toDouble * (nnz + 1) / 2
-        }
-        buf(2) += 1.0
+        buf(nG + 1) += 1.0
         buf
       },
-      combOp = (a, b) => { a(0) += b(0); a(1) += b(1); a(2) += b(2); a(3) += b(3); a },
+      combOp = addArrays,
       depth = 2)
-    (out(0).toLong, out(1), out(2).toLong, out(3).toLong)
+    Validated(out(nG).toLong, java.util.Arrays.copyOfRange(out, 0, nG),
+      out(nG + 1).toLong, out(nG + 2).toLong)
   }
 }

@@ -133,6 +133,30 @@ private[ebw] object EbwSizing {
       distributedGram = overResult || overHeap, why = why)
   }
 
+  /** THE Gram-placement decision for a sparse-Gram problem (k >
+   * denseGramMax), shared by the single and the grouped solvers: the
+   * plan for this driver's maxResultSize/heap budget, and whether the
+   * Gram is distributed (`gramMode` "distributed", or "auto" when the
+   * plan says the driver cannot hold it; "driver" fails fast instead). */
+  def place(sc: org.apache.spark.SparkContext, k: Int, sumPairs: Long,
+      currentParts: Int, gramMode: String): (Plan, Boolean) = {
+    require(Set("auto", "driver", "distributed")(gramMode),
+      s"gramMode must be auto|driver|distributed: $gramMode")
+    val maxResult = sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    val maxHeap = Runtime.getRuntime.maxMemory
+    val p = plan(k, sumPairs, currentParts, maxResult, maxHeap,
+      cores = sc.defaultParallelism)
+    val dist = gramMode match {
+      case "driver" => requireDriverFits(p, maxResult, maxHeap); false
+      case "distributed" => true
+      case _ => p.distributedGram
+    }
+    EbwLog.info(s"sparse Gram sizing: k=$k sumPairs=$sumPairs " +
+      s"parts=$currentParts->${p.partitions} depth=${p.depth} " +
+      s"mode=${if (dist) "distributed" else "driver"} (${p.why})")
+    (p, dist)
+  }
+
   /** Reduce-side partition count for the distributed Gram
    * (EbwAggregator.gramRdd): merged entries spread so one partition's
    * map stays near the partial target AND the concurrent reduce-task

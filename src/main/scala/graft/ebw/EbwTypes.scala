@@ -58,18 +58,9 @@ final case class EbwOptions(
      *  - "distributed": Gram stays an RDD (reduceByKey across executors)
      *    and Newton directions come from CG with distributed matvecs —
      *    O(k) driver traffic per CG iteration, no driver ceiling at any
-     *    N·nnz². */
-    gramMode: String = "auto",
-    /** Grouped distributed-Gram tier only: how many per-group
-     * single-problem solves run CONCURRENTLY when the groups shard
-     * (GroupedEntropyBalance.solveSharded). Each solve is its own
-     * sequence of treeAggregate/CG jobs with driver-side linalg gaps
-     * between them; co-scheduling a bounded number fills those gaps and
-     * shares the executors, so G groups cost far less than G sequential
-     * walls. Driver memory per concurrent solve is the single-problem
-     * O(k) envelope, so the bound multiplies that envelope — keep it
-     * small. 1 restores the round-14 sequential behavior. */
-    shardParallelism: Int = 4)
+     *    N·nnz². The grouped solvers then shard the groups across
+     *    single-problem solves, min(4, groups) of them at a time. */
+    gramMode: String = "auto")
 
 /**
  * Result container, mirroring `EntropyBalanceResults`
@@ -104,8 +95,10 @@ final case class EbwEvaluation(
     violationNorm: Double,
     weightTotal: Double)
 
-/** One observation: features (sparse iff idx != null, sorted indices) + initial weight. */
-private[ebw] final case class EbwRow(idx: Array[Int], vals: Array[Double], w0: Double)
+/** One observation: features (sparse iff idx != null, sorted indices),
+ * initial weight and, in the grouped solvers, the group index (0 in the
+ * single-problem solvers). */
+private[ebw] final case class EbwRow(idx: Array[Int], vals: Array[Double], w0: Double, g: Int = 0)
 
 /**
  * Per-row primal map r(t), t = x . theta. One aggregation kernel serves all

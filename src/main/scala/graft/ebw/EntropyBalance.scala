@@ -6,7 +6,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 import org.apache.spark.storage.StorageLevel
-import org.slf4j.LoggerFactory
 
 import DriverLinalg.{axpy, dot, norm2}
 
@@ -28,10 +27,16 @@ import DriverLinalg.{axpy, dot, norm2}
  */
 object EntropyBalance {
 
-  private val log = LoggerFactory.getLogger(getClass)
-
   private[ebw] final case class Prepared(
       rows: RDD[EbwRow], k: Int, sumW: Double, n: Long, sumPairs: Long = 0L)
+
+  private[ebw] def invalidInputs() = new IllegalArgumentException(
+    "Inputs include invalid values (NaNs, non-positive weights, etc)")
+
+  /** Targets must be finite (shared.py:105-133); every solver entry point
+   * checks them before any pass over the data. */
+  private[ebw] def requireFiniteTargets(moments: Array[Double]): Unit =
+    if (moments.exists(m => m.isNaN || m.isInfinite)) throw invalidInputs()
 
   /** Project the input down to (features, w0), convert to the compact row
    * form, cache it for the iteration loop, and fail fast on invalid inputs
@@ -40,51 +45,31 @@ object EntropyBalance {
       df: DataFrame, featuresCol: String, weightCol: String, k: Int,
       moments: Array[Double]): Prepared = {
     require(moments.length == k)
-    if (moments.exists(m => m.isNaN || m.isInfinite))
-      throw new IllegalArgumentException(
-        "Inputs include invalid values (NaNs, non-positive weights, etc)")
+    requireFiniteTargets(moments)
     val rows = df
       .select(col(featuresCol), col(weightCol).cast(DoubleType))
       .rdd
       .map(r => toEbwRow(r.get(0), if (r.isNullAt(1)) Double.NaN else r.getDouble(1)))
       .persist(StorageLevel.MEMORY_AND_DISK)
     rows.setName(s"ebw-input-k$k")
-    val (bad, sumW, n, sumPairs) = EbwAggregator.validate(rows, k)
-    if (bad > 0 || n == 0) {
+    val v = EbwAggregator.validate(rows, k)
+    if (v.bad > 0 || v.n == 0) {
       rows.unpersist(false)
-      throw new IllegalArgumentException(
-        "Inputs include invalid values (NaNs, non-positive weights, etc)")
+      throw invalidInputs()
     }
-    Prepared(rows, k, sumW, n, sumPairs)
+    Prepared(rows, k, v.sumW(0), v.n, v.sumPairs)
   }
 
-  /** Sparse-path pre-flight (k > denseGramMax): size partitions/tree
-   * depth from the measured row density and pick the Gram placement —
-   * driver-merged when this driver's maxResultSize/heap budget holds it,
-   * distributed otherwise (EbwSizing scaladoc). May replace the cached
-   * row RDD with a repartitioned copy so no partition's Gram partial
-   * outgrows the target. Returns (possibly-new Prepared, plan, dist). */
+  /** Sparse-path pre-flight (k > denseGramMax): the Gram placement
+   * (EbwSizing.place) plus partitions/tree depth sized from the measured
+   * row density. May replace the cached row RDD with a repartitioned copy
+   * so no partition's Gram partial outgrows the target. Returns
+   * (possibly-new Prepared, plan, dist). */
   private[ebw] def sizeForSparse(
       prep: Prepared, options: EbwOptions): (Prepared, Option[EbwSizing.Plan], Boolean) = {
     if (prep.k <= options.denseGramMax) return (prep, None, false)
-    require(Set("auto", "driver", "distributed")(options.gramMode),
-      s"gramMode must be auto|driver|distributed: ${options.gramMode}")
-    val sc = prep.rows.sparkContext
-    val maxResult = sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
-    val maxHeap = Runtime.getRuntime.maxMemory
-    val plan = EbwSizing.plan(prep.k, prep.sumPairs,
-      prep.rows.getNumPartitions, maxResult, maxHeap,
-      cores = sc.defaultParallelism)
-    val dist = options.gramMode match {
-      case "driver" =>
-        EbwSizing.requireDriverFits(plan, maxResult, maxHeap); false
-      case "distributed" => true
-      case _ => plan.distributedGram
-    }
-    EbwLog.info(s"sparse Gram sizing: sumPairs=${prep.sumPairs} " +
-      s"parts=${prep.rows.getNumPartitions}->${plan.partitions} " +
-      s"depth=${plan.depth} mode=${if (dist) "distributed" else "driver"} " +
-      s"(${plan.why})")
+    val (plan, dist) = EbwSizing.place(prep.rows.sparkContext, prep.k,
+      prep.sumPairs, prep.rows.getNumPartitions, options.gramMode)
     val prep2 =
       if (plan.partitions > prep.rows.getNumPartitions) {
         val r2 = prep.rows.repartition(plan.partitions)
@@ -100,16 +85,99 @@ object EntropyBalance {
     (prep2, Some(plan), dist)
   }
 
+  /**
+   * One prepared single problem: the cached rows and the Gram placement
+   * that every Newton step of the three single solvers runs through.
+   * `agg` is the aggregate pass at theta — packed Gram (k <=
+   * denseGramMax), driver-merged LongMap Gram, or no Gram when the Gram is
+   * distributed (then built once per accepted iterate, inside
+   * `direction`, so line-search trials stay Θ(N·nnz)). `direction` solves
+   * (sign*G(theta) + diag + ridge*I) d = rhs on the `free` coordinates:
+   * dense Cholesky or driver CG on the pass's Gram, or CG with
+   * distributed matvecs over an RDD Gram.
+   */
+  private final class Problem(
+      val prep: Prepared, plan: Option[EbwSizing.Plan], dist: Boolean) {
+    val k: Int = prep.k
+
+    def agg(th: Array[Double], link: Link): EbwAggregator.Pass = plan match {
+      case None => EbwAggregator.run(prep.rows, k, th, link)
+      case Some(_) if dist => EbwAggregator.run(prep.rows, k, th, link, withGram = false)
+      case Some(p) => EbwAggregator.runSparse(prep.rows, k, th, link, p.depth)
+    }
+
+    def direction(pass: EbwAggregator.Pass, th: Array[Double], link: Link,
+        rhs: Array[Double], diag: Array[Double], sign: Double, ridge: Double,
+        free: Array[Boolean]): Array[Double] =
+      if (!dist) DriverLinalg.direction(pass, k, diag, rhs, sign, ridge, free)
+      else {
+        val g = EbwAggregator.gramRdd(prep.rows, k, th, link,
+            EbwSizing.gramAggParts(plan.get, Runtime.getRuntime.maxMemory,
+              prep.rows.sparkContext.defaultParallelism))
+          .persist(StorageLevel.MEMORY_AND_DISK_SER)
+        try DriverLinalg.cgSolveRdd(g, k, diag, rhs, ridge, free, sign)
+        finally g.unpersist(false)
+      }
+  }
+
+  /** The single solvers' shared frame: validate (BEFORE the warm-start
+   * pass, so malformed inputs fail with the documented error, not an index
+   * error inside ratioSeed), resolve the warm start, place the Gram, run
+   * `loop`, dump, and release the cached rows however the solve ends. */
+  private def solveWith(
+      df: DataFrame, featuresCol: String, weightCol: String,
+      m: Array[Double], options: EbwOptions)(
+      loop: (Problem, EbwOptions) => EbwResult): EbwResult = {
+    val k = m.length
+    options.initialMultipliers.foreach(mu => require(mu.length == k,
+      s"initialMultipliers has ${mu.length} entries, expected $k"))
+    val prep0 = prepare(df, featuresCol, weightCol, k, m)
+    var live = prep0
+    try {
+      val opts = resolveWarmStart(df, featuresCol, weightCol, k, options)
+      val (prep, plan, dist) = sizeForSparse(prep0, opts)
+      live = prep
+      val res = loop(new Problem(prep, plan, dist), opts)
+      // save_problem_data / save_failure_data (ebw_routines.py:312-319):
+      // always dump to the former, to the latter only on failure; the dump
+      // reuses the solve's cached row projection
+      options.saveProblemData.foreach(ProblemIO.saveRows(df.sparkSession, prep.rows, m, _))
+      if (!res.converged)
+        options.saveFailureData.foreach(ProblemIO.saveRows(df.sparkSession, prep.rows, m, _))
+      res
+    } finally live.rows.unpersist(false)
+  }
+
   /** Decode one feature cell; null elements inside an array flag the row
    * invalid (vals = null) instead of silently unboxing to 0.0. */
-  private[ebw] def toEbwRow(feat: Any, w: Double): EbwRow = feat match {
-    case v: SparseVector => EbwRow(v.indices, v.values, w)
-    case v: DenseVector  => EbwRow(null, v.values, w)
+  private[ebw] def toEbwRow(feat: Any, w: Double, g: Int = 0): EbwRow = feat match {
+    case v: SparseVector => EbwRow(v.indices, v.values, w, g)
+    case v: DenseVector  => EbwRow(null, v.values, w, g)
     case s: scala.collection.Seq[_] =>
       val seq = s.asInstanceOf[scala.collection.Seq[Any]]
-      if (seq.exists(_ == null)) EbwRow(null, null, w)
-      else EbwRow(null, seq.map(_.asInstanceOf[Double]).toArray, w)
-    case _ => EbwRow(null, null, w)
+      if (seq.exists(_ == null)) EbwRow(null, null, w, g)
+      else EbwRow(null, seq.map(_.asInstanceOf[Double]).toArray, w, g)
+    case _ => EbwRow(null, null, w, g)
+  }
+
+  /** (lb, ub) ratio bounds of `options`: lb clamped at 0 as the reference
+   * does (ebw_routines.py:362), ub = inf when absent. */
+  private[ebw] def ratioBounds(options: EbwOptions): (Double, Double) = {
+    val (lb, ub) = options.bounds.getOrElse((0.0, None: Option[Double]))
+    (math.max(0.0, lb), ub.getOrElse(Double.PositiveInfinity))
+  }
+
+  /** Per-moment penalties: one value broadcast to all k, or one per moment,
+   * all strictly positive. */
+  private[ebw] def penalties(penaltyParameter: Array[Double], k: Int): Array[Double] = {
+    val pen =
+      if (penaltyParameter.length == 1) Array.fill(k)(penaltyParameter(0))
+      else penaltyParameter
+    if (pen.length != k)
+      throw new IllegalArgumentException("Penalties must be one per moment.")
+    if (!pen.forall(_ > 0.0))
+      throw new IllegalArgumentException("Penalty parameters must be strictly positive.")
+    pen
   }
 
   /** The ratio r(x . theta) as a DataFrame column. For array<double>
@@ -134,11 +202,7 @@ object EntropyBalance {
         col(featuresCol).cast("array<double>"), typedlit(th.toSeq),
         lit(eta), lit(lb), lit(ub))
     } else {
-      val f = udf { v: Vector =>
-        var t = 0.0
-        v.foreachActive((i, x) => t += x * th(i))
-        lk.r(t)
-      }
+      val f = udf { v: Vector => EbwAggregator.eval(toEbwRow(v, 1.0), th, lk, th.length)._1 }
       f(col(featuresCol))
     }
   }
@@ -175,7 +239,7 @@ object EntropyBalance {
             toEbwRow(r.get(0), if (r.isNullAt(1)) Double.NaN else r.getDouble(1)),
             if (r.isNullAt(2)) Double.NaN else r.getDouble(2)))
         val (gram, rhs) = EbwAggregator.ratioSeed(rows, k)
-        val lambda0 = DriverLinalg.solveRidged(k, gram, rhs, 1e-10)
+        val lambda0 = DriverLinalg.cholesky(k, gram, new Array[Double](k), rhs, 1e-10)
         EbwLog.info(s"primal warm start: seeded ${k} multipliers from '$rc'")
         options.copy(initialMultipliers = Some(lambda0))
       case (Some(rc), None) =>
@@ -204,10 +268,7 @@ object EntropyBalance {
       s"multipliers has ${multipliers.length} entries, expected $k")
     val prep = prepare(df, featuresCol, weightCol, k, meanPopulationMoments)
     try {
-      val pass =
-        if (k > EbwOptions().denseGramMax)
-          EbwAggregator.runSparse(prep.rows, k, multipliers, Link.exp)
-        else EbwAggregator.run(prep.rows, k, multipliers, Link.exp)
+      val pass = EbwAggregator.run(prep.rows, k, multipliers, Link.exp, withGram = false)
       val b = meanPopulationMoments.map(_ * prep.sumW)
       val ce = axpy(-1.0, b, pass.s)
       EbwEvaluation(pass.fval, ce, norm2(ce), pass.wrsum)
@@ -233,67 +294,23 @@ object EntropyBalance {
     if (options.bounds.isDefined)
       return entropyBalanceElastic(df, featuresCol, weightCol,
         meanPopulationMoments, outputCol, options)
-    val k = meanPopulationMoments.length
-    options.initialMultipliers.foreach(mu => require(mu.length == k,
-      s"initialMultipliers has ${mu.length} entries, expected $k"))
-    // validate BEFORE the warm-start pass so malformed inputs fail with
-    // the documented error, not an index error inside ratioSeed
-    val prep0 = prepare(df, featuresCol, weightCol, k, meanPopulationMoments)
-    var live = prep0
-    try {
-      val opts = resolveWarmStart(df, featuresCol, weightCol, k, options)
-      val (prep, plan, dist) = sizeForSparse(prep0, opts)
-      live = prep
-      val res = unboundedLoop(df, featuresCol, weightCol, outputCol, prep,
-        meanPopulationMoments, opts, plan, dist)
-      maybeDump(df.sparkSession, prep, meanPopulationMoments, options, res)
-      res
-    } finally live.rows.unpersist(false)
-  }
-
-  /** save_problem_data / save_failure_data semantics
-   * (ebw_routines.py:312-319): always dump to the former; dump to the
-   * latter only on failure. Reuses the solve's cached row projection. */
-  private def maybeDump(
-      spark: org.apache.spark.sql.SparkSession, prep: Prepared,
-      m: Array[Double], options: EbwOptions, res: EbwResult): Unit = {
-    options.saveProblemData.foreach(p =>
-      ProblemIO.saveRows(spark, prep.rows, m, p))
-    if (!res.converged)
-      options.saveFailureData.foreach(p =>
-        ProblemIO.saveRows(spark, prep.rows, m, p))
+    solveWith(df, featuresCol, weightCol, meanPopulationMoments, options)(
+      unboundedLoop(df, featuresCol, weightCol, outputCol, _, meanPopulationMoments, _))
   }
 
   private def unboundedLoop(
       df: DataFrame, featuresCol: String, weightCol: String, outputCol: String,
-      prep: Prepared, m: Array[Double], options: EbwOptions,
-      plan: Option[EbwSizing.Plan] = None, distGram: Boolean = false): EbwResult = {
+      prob: Problem, m: Array[Double], options: EbwOptions): EbwResult = {
+    val prep = prob.prep
     val k = prep.k
     val b = m.map(_ * prep.sumW)
     val bscale = math.max(1.0, norm2(b))
     val link = Link.exp
-    val sparseGram = k > options.denseGramMax
-    val gramDepth = plan.map(_.depth).getOrElse(2)
-    // distributed-Gram mode: line-search/gradient passes carry NO Gram
-    // (Θ(N·nnz), runStats); the Gram is built once per accepted iterate
-    // as an RDD and the Newton direction comes from distributed-matvec CG
-    def agg(th: Array[Double]) =
-      if (!sparseGram) EbwAggregator.run(prep.rows, k, th, link)
-      else if (distGram) EbwAggregator.runStats(prep.rows, k, th, link)
-      else EbwAggregator.runSparse(prep.rows, k, th, link, gramDepth)
-    def distDir(th: Array[Double], negCe: Array[Double], ridge: Double): Array[Double] = {
-      val g = EbwAggregator.gramRdd(prep.rows, k, th, link,
-          EbwSizing.gramAggParts(plan.get,
-            Runtime.getRuntime.maxMemory,
-            prep.rows.sparkContext.defaultParallelism))
-        .persist(StorageLevel.MEMORY_AND_DISK_SER)
-      try DriverLinalg.cgSolveRdd(g, k, new Array[Double](k), negCe, ridge, null)
-      finally g.unpersist(false)
-    }
+    val noDiag = new Array[Double](k)
     var lambda = options.initialMultipliers
       .map(_.clone())
       .getOrElse(new Array[Double](k))
-    var pass = agg(lambda)
+    var pass = prob.agg(lambda, link)
     var ce = axpy(-1.0, b, pass.s)
     var steps = 0
     var converged = false
@@ -314,12 +331,7 @@ object EntropyBalance {
         // (G + ridge I) d = -Ce ; adaptive ridge as ebw_routines.py:235-237
         val ridge = math.max(1e-8, 1e-5 * math.pow(viol / bscale, 0.55))
         val negCe = ce.map(-_)
-        val d =
-          if (distGram) distDir(lambda, negCe, ridge)
-          else if (pass.isSparse)
-            DriverLinalg.cgSolve(k, pass.gramKeys, pass.gramVals,
-              new Array[Double](k), negCe, ridge, null)
-          else DriverLinalg.solveRidged(k, pass.gram, negCe, ridge)
+        val d = prob.direction(pass, lambda, link, negCe, noDiag, 1.0, ridge, null)
         // Armijo backtracking on the dual objective
         // D(lambda) = b.lambda - (sum w0 exp(x.lambda) - sumW)
         val dCur = dot(b, lambda) - (pass.wrsum - prep.sumW)
@@ -329,7 +341,7 @@ object EntropyBalance {
         var trial = 0
         while (!accepted && trial < 14) {
           val cand = axpy(alpha, d, lambda)
-          val p2 = agg(cand)
+          val p2 = prob.agg(cand, link)
           val dCand = dot(b, cand) - (p2.wrsum - prep.sumW)
           if (!dCand.isNaN &&
               dCand >= dCur + 1e-4 * alpha * gd - 1e-10 * (1.0 + math.abs(dCur))) {
@@ -382,31 +394,16 @@ object EntropyBalance {
       meanPopulationMoments: Array[Double],
       outputCol: String = "weight_new",
       options: EbwOptions = EbwOptions()): EbwResult = {
-    val k = meanPopulationMoments.length
-    options.initialMultipliers.foreach(mu => require(mu.length == k,
-      s"initialMultipliers has ${mu.length} entries, expected $k"))
-    // validate first (see entropyBalance)
-    val prep0 = prepare(df, featuresCol, weightCol, k, meanPopulationMoments)
-    var live = prep0
-    try {
-      val opts = resolveWarmStart(df, featuresCol, weightCol, k, options)
-      val (prep, plan, dist) = sizeForSparse(prep0, opts)
-      live = prep
-      val res = elasticLoop(df, featuresCol, weightCol, outputCol, prep,
-        meanPopulationMoments, opts, plan, dist)
-      maybeDump(df.sparkSession, prep, meanPopulationMoments, options, res)
-      res
-    } finally live.rows.unpersist(false)
+    solveWith(df, featuresCol, weightCol, meanPopulationMoments, options)(
+      elasticLoop(df, featuresCol, weightCol, outputCol, _, meanPopulationMoments, _))
   }
 
   private def elasticLoop(
       df: DataFrame, featuresCol: String, weightCol: String, outputCol: String,
-      prep: Prepared, m: Array[Double], options: EbwOptions,
-      plan: Option[EbwSizing.Plan] = None, distGram: Boolean = false): EbwResult = {
+      prob: Problem, m: Array[Double], options: EbwOptions): EbwResult = {
+    val prep = prob.prep
     val k = prep.k
-    val (lbRaw, ubOpt) = options.bounds.getOrElse((0.0, None: Option[Double]))
-    val lb = math.max(0.0, lbRaw) // reference clamps negative lb (L362)
-    val ub = ubOpt.getOrElse(Double.PositiveInfinity)
+    val (lb, ub) = ratioBounds(options)
     require(ub > lb, "upper bound must exceed lower bound")
     val b = m.map(_ * prep.sumW)
     val bscale = math.max(1.0, norm2(b))
@@ -417,23 +414,8 @@ object EntropyBalance {
       var i = 0
       while (i < k) { lambda(i) = math.max(-1.0, math.min(1.0, mu(i) / eta)); i += 1 }
     }
-    val sparseGram = k > options.denseGramMax
-    val gramDepth = plan.map(_.depth).getOrElse(2)
-    def agg(th: Array[Double], lnk: Link) =
-      if (!sparseGram) EbwAggregator.run(prep.rows, k, th, lnk)
-      else if (distGram) EbwAggregator.runStats(prep.rows, k, th, lnk)
-      else EbwAggregator.runSparse(prep.rows, k, th, lnk, gramDepth)
-    def distDir(th: Array[Double], lnk: Link, pg: Array[Double],
-        ridge: Double, freeMask: Array[Boolean]): Array[Double] = {
-      val g = EbwAggregator.gramRdd(prep.rows, k, th, lnk,
-          EbwSizing.gramAggParts(plan.get,
-            Runtime.getRuntime.maxMemory,
-            prep.rows.sparkContext.defaultParallelism))
-        .persist(StorageLevel.MEMORY_AND_DISK_SER)
-      try DriverLinalg.cgSolveRdd(g, k, new Array[Double](k), pg, ridge, freeMask)
-      finally g.unpersist(false)
-    }
-    var pass = agg(lambda, Link.clip(eta, lb, ub))
+    val noDiag = new Array[Double](k)
+    var pass = prob.agg(lambda, Link.clip(eta, lb, ub))
     var ce = axpy(-1.0, b, pass.s)
     var totalSteps = 0
     var converged = false
@@ -458,7 +440,6 @@ object EntropyBalance {
           if (lambda(i) <= -1.0 + 1e-12 && grad(i) < 0) pinned(i) = true
           i += 1
         }
-        val free = (0 until k).filter(!pinned(_)).toArray
         val pg = new Array[Double](k)
         i = 0
         while (i < k) { pg(i) = if (pinned(i)) 0.0 else grad(i); i += 1 }
@@ -470,12 +451,8 @@ object EntropyBalance {
           innerDone = true
         } else {
           val ridge = math.max(1e-8, 1e-5 * math.pow(pgNorm / bscale, 0.55))
-          val d =
-            if (distGram) distDir(lambda, link, pg, ridge, pinned.map(!_))
-            else if (pass.isSparse)
-              DriverLinalg.cgSolve(k, pass.gramKeys, pass.gramVals,
-                new Array[Double](k), pg, ridge, pinned.map(!_))
-            else DriverLinalg.solveSubset(k, pass.gram, pg, free, ridge)
+          val d = prob.direction(pass, lambda, link, pg, noDiag, 1.0, ridge,
+            pinned.map(!_))
           // When most rows are clipped the interior Gram is tiny and the
           // Newton direction blows up; any move beyond the box diameter is
           // meaningless, so cap ||d||_inf at 2 (degrades gracefully into
@@ -502,7 +479,7 @@ object EntropyBalance {
             var gdMove = 0.0
             j = 0
             while (j < k) { gdMove += pg(j) * (cand(j) - lambda(j)); j += 1 }
-            val p2 = agg(cand, link)
+            val p2 = prob.agg(cand, link)
             val ce2 = axpy(-1.0, b, p2.s)
             val gCand = p2.fval / eta - dot(cand, ce2)
             if (!gCand.isNaN && gdMove >= 0.0 &&
@@ -543,7 +520,7 @@ object EntropyBalance {
           lambda(i) = math.max(-1.0, math.min(1.0, lambda(i) * etaOld / eta))
           i += 1
         }
-        pass = agg(lambda, Link.clip(eta, lb, ub))
+        pass = prob.agg(lambda, Link.clip(eta, lb, ub))
         ce = axpy(-1.0, b, pass.s)
       } else grow = false
       if (outer > 12) grow = false
@@ -575,49 +552,22 @@ object EntropyBalance {
       outputCol: String = "weight_new",
       options: EbwOptions = EbwOptions()): EbwResult = {
     val k = meanPopulationMoments.length
-    val pen =
-      if (penaltyParameter.length == 1) Array.fill(k)(penaltyParameter(0))
-      else penaltyParameter
-    if (pen.length != k)
-      throw new IllegalArgumentException("Penalties must be one per moment.")
-    if (!pen.forall(_ > 0.0))
-      throw new IllegalArgumentException("Penalty parameters must be strictly positive.")
-    val prep0 = prepare(df, featuresCol, weightCol, k, meanPopulationMoments)
-    var live = prep0
-    try {
-      val (prep, plan, distGram) = sizeForSparse(prep0, options)
-      live = prep
-      val (lbRaw, ubOpt) = options.bounds.getOrElse((0.0, None: Option[Double]))
-      val lb = math.max(0.0, lbRaw)
-      val ub = ubOpt.getOrElse(Double.PositiveInfinity)
+    val pen = penalties(penaltyParameter, k)
+    // the penalty loop starts at z = 0 and writes no problem dumps
+    val opts = options.copy(initialMultipliers = None, initialRatioGuessCol = None,
+      saveProblemData = None, saveFailureData = None)
+    solveWith(df, featuresCol, weightCol, meanPopulationMoments, opts) { (prob, _) =>
+      val prep = prob.prep
+      val (lb, ub) = ratioBounds(options)
       // CLIP with eta=-1 gives r = clip(exp(-t), lb, ub); with no bounds the
       // clip is inert, so one loop serves both variants.
       val link =
         if (options.bounds.isDefined) Link.clip(-1.0, lb, ub)
         else Link.clip(-1.0, 0.0, Double.PositiveInfinity)
-      val b = m2agg(meanPopulationMoments, prep.sumW)
+      val b = meanPopulationMoments.map(_ * prep.sumW)
       val bscale = math.max(1.0, norm2(b))
-      val sparseGram = k > options.denseGramMax
-      val gramDepth = plan.map(_.depth).getOrElse(2)
-      def agg(th: Array[Double]) =
-        if (!sparseGram) EbwAggregator.run(prep.rows, k, th, link)
-        else if (distGram) EbwAggregator.runStats(prep.rows, k, th, link)
-        else EbwAggregator.runSparse(prep.rows, k, th, link, gramDepth)
-      // penalty system: (P^-1 + G) d = rhs with aggregated dS/dz = -G,
-      // hence sign = -1 on the distributed matvec (matches the driver
-      // paths' vals.map(-_) / gram.map(-_))
-      def distDir(th: Array[Double], invP: Array[Double], rhs: Array[Double],
-          ridge: Double): Array[Double] = {
-        val g = EbwAggregator.gramRdd(prep.rows, k, th, link,
-            EbwSizing.gramAggParts(plan.get,
-            Runtime.getRuntime.maxMemory,
-            prep.rows.sparkContext.defaultParallelism))
-          .persist(StorageLevel.MEMORY_AND_DISK_SER)
-        try DriverLinalg.cgSolveRdd(g, k, invP, rhs, ridge, null, sign = -1.0)
-        finally g.unpersist(false)
-      }
       var z = new Array[Double](k)
-      var pass = agg(z)
+      var pass = prob.agg(z, link)
       var ce = axpy(-1.0, b, pass.s)
       val maxSteps =
         if (options.bounds.isDefined) options.maxStepsBounded else options.maxSteps
@@ -638,24 +588,19 @@ object EntropyBalance {
         } else if (steps >= maxSteps) {
           done = true
         } else {
-          // gram accumulated dS/dz with CLIP(-1): dS/dz = -G, G PSD
-          // (P^-1 + G) delta = -P^-1 F
+          // gram accumulated dS/dz with CLIP(-1): dS/dz = -G, G PSD, so
+          // (P^-1 + G) delta = -P^-1 F is the direction with sign = -1
           val rhs = new Array[Double](k)
           i = 0
           while (i < k) { rhs(i) = -invP(i) * f(i); i += 1 }
           val ridge = math.max(1e-10, 1e-7 * fNorm / bscale)
-          val d =
-            if (distGram) distDir(z, invP, rhs, ridge)
-            else if (pass.isSparse)
-              DriverLinalg.cgSolve(k, pass.gramKeys, pass.gramVals.map(-_),
-                invP, rhs, ridge, null)
-            else DriverLinalg.solveWithDiag(k, pass.gram.map(-_), invP, rhs, ridge)
+          val d = prob.direction(pass, z, link, rhs, invP, -1.0, ridge, null)
           var alpha = 1.0
           var accepted = false
           var trial = 0
           while (!accepted && trial < 14) {
             val cand = axpy(alpha, d, z)
-            val p2 = agg(cand)
+            val p2 = prob.agg(cand, link)
             val ce2 = axpy(-1.0, b, p2.s)
             val f2 = new Array[Double](k)
             var j = 0
@@ -680,8 +625,6 @@ object EntropyBalance {
       results(df, featuresCol, weightCol, outputCol, z, link, converged,
         steps, ce, z.map(-_), None, pass.fval,
         if (converged) "" else "penalty solve did not converge")
-    } finally live.rows.unpersist(false)
+    }
   }
-
-  private def m2agg(m: Array[Double], sumW: Double): Array[Double] = m.map(_ * sumW)
 }

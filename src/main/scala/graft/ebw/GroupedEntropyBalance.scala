@@ -1,5 +1,7 @@
 package graft.ebw
 
+import scala.collection.mutable.LongMap
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -15,12 +17,15 @@ import DriverLinalg.{axpy, norm2}
  * independent small ones, e.g. per-source reweighting of training data).
  *
  * All groups advance together: each Newton round is ONE treeAggregate over
- * the full dataset computing every group's (Ce, Gram) — G problems cost one
- * scan, not G scans. Driver state is a k-vector per group; converged groups
- * freeze (their rows stop contributing Gram work via a skip check). The
- * same round pass serves the exact solver (dual Newton, optional elastic
- * bounds with per-group auto-eta) and the penalty solver (fixed point
- * z = P(A'Phi(z) - b), link = clip(exp(-t)) i.e. eta = -1).
+ * the full dataset ([[roundPass]]) running the single solvers' row kernel
+ * (EbwAggregator) into one block per group, so G problems cost one scan,
+ * not G scans, and each group's (s, Gram) is bit-identical to the single
+ * kernel on that group's rows. Driver state is a k-vector per group;
+ * converged groups freeze (their rows skip the kernel). Each group's
+ * Newton direction is the single solvers' solve (DriverLinalg.direction).
+ * The same round pass serves the exact solver (dual Newton, optional
+ * elastic bounds with per-group auto-eta) and the penalty solver (fixed
+ * point z = P(A'Phi(z) - b), link = clip(exp(-t)) i.e. eta = -1).
  */
 object GroupedEntropyBalance {
 
@@ -36,13 +41,12 @@ object GroupedEntropyBalance {
     def allConverged: Boolean = groups.values.forall(_.converged)
   }
 
-  private final case class GRow(g: Int, idx: Array[Int], vals: Array[Double], w0: Double)
-
   // ------------------------------------------------------------ shared plumbing
 
-  private def prepGRows(
+  /** Rows of targeted groups as EbwRows tagged with their group index. */
+  private def groupRows(
       df: DataFrame, groupCol: String, featuresCol: String, weightCol: String,
-      gIdx: Map[String, Int], nG: Int, k: Int): RDD[GRow] = {
+      gIdx: Map[String, Int], nG: Int, k: Int): RDD[EbwRow] = {
     val bcGIdx = df.sparkSession.sparkContext.broadcast(gIdx)
     val rows = df
       .select(col(groupCol).cast("string"), col(featuresCol), col(weightCol).cast(DoubleType))
@@ -51,8 +55,7 @@ object GroupedEntropyBalance {
         val gname = if (r.isNullAt(0)) null else r.getString(0)
         Option(gname).flatMap(bcGIdx.value.get).map { g =>
           val w = if (r.isNullAt(2)) Double.NaN else r.getDouble(2)
-          val e = EntropyBalance.toEbwRow(r.get(1), w)
-          GRow(g, e.idx, e.vals, e.w0)
+          EntropyBalance.toEbwRow(r.get(1), w, g)
         }
       }
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -60,216 +63,77 @@ object GroupedEntropyBalance {
     rows
   }
 
-  /** One pass: per-group sumW plus the same validation discipline as
-   * EbwAggregator.validate (fail fast, never AIOOBE in the solve loop),
-   * and the total Gram-entry contributions Σ nnz(nnz+1)/2 — the EbwSizing
-   * input, counted in the same scan so routing costs nothing extra. */
-  private def validateSumW(
-      rows: RDD[GRow], nG: Int, k: Int): (Array[Double], Long) = {
-    val w0Stats = rows.treeAggregate(new Array[Double](nG + 2))(
-      (buf, r) => {
-        var bad = r.w0.isNaN || r.w0.isInfinite || r.w0 <= 0.0 || r.vals == null
-        var nnz = 0
-        if (!bad) {
-          if (r.idx == null) {
-            if (r.vals.length != k) bad = true
-          } else {
-            if (r.idx.length != r.vals.length) bad = true
-            else if (r.idx.length > 0 &&
-                (r.idx(r.idx.length - 1) >= k || r.idx(0) < 0)) bad = true
-          }
-        }
-        if (!bad) {
-          var p = 0
-          while (p < r.vals.length && !bad) {
-            val v = r.vals(p)
-            if (v.isNaN || v.isInfinite) bad = true
-            else if (v != 0.0) nnz += 1
-            p += 1
-          }
-        }
-        if (bad) buf(nG) += 1
-        else {
-          buf(r.g) += r.w0
-          buf(nG + 1) += nnz.toDouble * (nnz + 1) / 2
-        }
-        buf
-      },
-      (a, b) => { var i = 0; while (i <= nG + 1) { a(i) += b(i); i += 1 }; a },
-      depth = 2)
-    if (w0Stats(nG) > 0)
-      throw new IllegalArgumentException(
-        "Inputs include invalid values (NaNs, non-positive weights, etc)")
-    (Array.tabulate(nG)(w0Stats), w0Stats(nG + 1).toLong)
-  }
-
-  /** Per-round aggregates with per-group accessors; dense layout is the
-   * flat [wrsum, s(k), gram(tri)] block per group, sparse layout keeps s
-   * flat and the Gram as per-group key/value arrays for CG. */
-  private final class RoundData(
-      nG: Int, k: Int, blk: Int,
-      aggDense: Array[Double], sparseS: Array[Double],
-      val gramKeysByG: Array[Array[Long]], val gramValsByG: Array[Array[Double]]) {
-    def sparse: Boolean = aggDense == null
-    def s(g: Int): Array[Double] =
-      if (sparse) java.util.Arrays.copyOfRange(sparseS, g * k, (g + 1) * k)
-      else java.util.Arrays.copyOfRange(aggDense, g * blk + 1, g * blk + 1 + k)
-    def gramDense(g: Int): Array[Double] =
-      java.util.Arrays.copyOfRange(aggDense, g * blk + 1 + k, (g + 1) * blk)
-  }
-
   /**
-   * THE shared distributed kernel: one treeAggregate computing, for every
-   * unconverged group g, wrsum_g, s_g = sum w0 r x and the Gram
-   * sum w0 r' x x' under the clip link r = clip(exp(eta_g * t), lb, ub).
-   * Above denseGramMax the flat per-task buffer (nG * (1+k+k(k+1)/2)
-   * doubles: 500 groups x k=1000 would be ~2 GB/task) is replaced by a
-   * sparse accumulation — s stays flat (nG*k), the Gram becomes a LongMap
-   * keyed by (g*k+i)*k+j, proportional to the realized cross pattern.
+   * One Newton round's shared pass: a single treeAggregate running
+   * EbwAggregator's row kernel for every row of an unconverged group g,
+   * under that group's link clip(exp(eta_g * t), lb, ub), into that
+   * group's block — the packed sink at offset g*(k + k(k+1)/2) up to
+   * denseGramMax; above it (500 groups x k = 1000 packed would be ~2
+   * GB/task) s stays flat at offset g*k and the Gram goes to the LongMap
+   * sink at key base g*k*k, proportional to the realized cross pattern.
+   * Returns each group's (s, Gram) as a Pass; null for converged groups.
    */
-  private def roundPass(
-      rows: RDD[GRow], nG: Int, k: Int,
+  private[ebw] def roundPass(
+      rows: RDD[EbwRow], nG: Int, k: Int,
       lambda: Array[Array[Double]], etas: Array[Double], done: Array[Boolean],
-      lb: Double, ub: Double, sparseGram: Boolean): RoundData = {
+      lb: Double, ub: Double, sparseGram: Boolean): Array[EbwAggregator.Pass] = {
+    import EbwAggregator._
     val spark = rows.sparkContext
     val tri = k * (k + 1) / 2
-    val blk = 1 + k + tri
+    val blk = k + tri
     val bcLambda = spark.broadcast(lambda)
+    val bcLinks = spark.broadcast(etas.map(Link.clip(_, lb, ub)))
     val bcDone = spark.broadcast(done)
-    val bcEta = spark.broadcast(etas)
-
-    @inline def linkOf(r: GRow): (Double, Double) = {
-      val th = bcLambda.value(r.g)
-      val eta = bcEta.value(r.g)
-      var t = 0.0
-      if (r.idx == null) {
-        var j = 0
-        while (j < k) { t += r.vals(j) * th(j); j += 1 }
-      } else {
-        var p = 0
-        while (p < r.idx.length) { t += r.vals(p) * th(r.idx(p)); p += 1 }
-      }
-      val (rr, rp) = Link.clipRAndSlope(eta, lb, ub, t)
-      (r.w0 * rr, r.w0 * rp)
-    }
-
-    val out =
+    def pass(g: Int, s: Array[Double], gram: Array[Double],
+        keys: Array[Long], vals: Array[Double]): Pass =
+      if (done(g)) null else Pass(s, gram, 0.0, 0.0, keys, vals)
+    try {
       if (!sparseGram) {
-        val aggDense = rows.treeAggregate(new Array[Double](nG * blk))(
-          (buf, r) => {
-            if (!bcDone.value(r.g)) {
-              val (wr, wrp) = linkOf(r)
-              val base = r.g * blk
-              buf(base) += wr
-              if (r.idx == null) {
-                var i = 0
-                while (i < k) {
-                  val vi = r.vals(i)
-                  buf(base + 1 + i) += wr * vi
-                  if (vi != 0.0 && wrp != 0.0) {
-                    val gb = base + 1 + k + i * k - i * (i + 1) / 2
-                    var j = i
-                    while (j < k) { buf(gb + j) += wrp * vi * r.vals(j); j += 1 }
-                  }
-                  i += 1
-                }
-              } else {
-                var p = 0
-                while (p < r.idx.length) {
-                  val i = r.idx(p); val vi = r.vals(p)
-                  buf(base + 1 + i) += wr * vi
-                  if (wrp != 0.0) {
-                    val gb = base + 1 + k + i * k - i * (i + 1) / 2
-                    var q = p
-                    while (q < r.idx.length) { buf(gb + r.idx(q)) += wrp * vi * r.vals(q); q += 1 }
-                  }
-                  p += 1
-                }
-              }
+        val out = rows.treeAggregate(new Array[Double](nG * blk))(
+          (buf, row) => {
+            val g = row.g
+            if (!bcDone.value(g)) {
+              val (r, rp) = eval(row, bcLambda.value(g), bcLinks.value(g), k)
+              addPacked(buf, g * blk, g * blk + k, row, k, row.w0 * r, row.w0 * rp)
             }
             buf
           },
-          (a, c) => { var i = 0; while (i < a.length) { a(i) += c(i); i += 1 }; a },
-          depth = 2)
-        new RoundData(nG, k, blk, aggDense, null, null, null)
+          addArrays, depth = 2)
+        Array.tabulate(nG)(g => pass(g,
+          java.util.Arrays.copyOfRange(out, g * blk, g * blk + k),
+          java.util.Arrays.copyOfRange(out, g * blk + k, (g + 1) * blk), null, null))
       } else {
-        final case class GAcc(
-            wr: Array[Double], s: Array[Double],
-            gram: scala.collection.mutable.LongMap[Double])
-        val acc0 = GAcc(new Array[Double](nG), new Array[Double](nG * k),
-          new scala.collection.mutable.LongMap[Double]())
-        val agg = rows.treeAggregate(acc0)(
-          (acc, r) => {
-            if (!bcDone.value(r.g)) {
-              val (wr, wrp) = linkOf(r)
-              acc.wr(r.g) += wr
-              val sBase = r.g * k
-              val gBase = r.g.toLong * k * k
-              if (r.idx == null) {
-                var i = 0
-                while (i < k) {
-                  val vi = r.vals(i)
-                  if (vi != 0.0) {
-                    acc.s(sBase + i) += wr * vi
-                    if (wrp != 0.0) {
-                      var j = i
-                      while (j < k) {
-                        val vj = r.vals(j)
-                        if (vj != 0.0) {
-                          val key = gBase + i.toLong * k + j
-                          acc.gram.update(key, acc.gram.getOrElse(key, 0.0) + wrp * vi * vj)
-                        }
-                        j += 1
-                      }
-                    }
-                  }
-                  i += 1
-                }
-              } else {
-                var p = 0
-                while (p < r.idx.length) {
-                  val i = r.idx(p); val vi = r.vals(p)
-                  acc.s(sBase + i) += wr * vi
-                  if (wrp != 0.0) {
-                    var q = p
-                    while (q < r.idx.length) {
-                      val key = gBase + i.toLong * k + r.idx(q)
-                      acc.gram.update(key, acc.gram.getOrElse(key, 0.0) + wrp * vi * r.vals(q))
-                      q += 1
-                    }
-                  }
-                  p += 1
-                }
-              }
+        val (s, gram) = rows.treeAggregate(
+            (new Array[Double](nG * k), new LongMap[Double]()))(
+          (acc, row) => {
+            val g = row.g
+            if (!bcDone.value(g)) {
+              val (r, rp) = eval(row, bcLambda.value(g), bcLinks.value(g), k)
+              addSparse(acc._1, g * k, acc._2, g.toLong * k * k, row, k,
+                row.w0 * r, row.w0 * rp)
             }
             acc
           },
-          (a, c) => {
-            var i = 0
-            while (i < nG) { a.wr(i) += c.wr(i); i += 1 }
-            i = 0
-            while (i < nG * k) { a.s(i) += c.s(i); i += 1 }
-            c.gram.foreachEntry((key, v) =>
-              a.gram.update(key, a.gram.getOrElse(key, 0.0) + v))
-            a
-          },
+          (a, b) => { addArrays(a._1, b._1); addMaps(a._2, b._2); a },
           depth = 2)
-        // split the global map into per-group key/val arrays (keys re-based
-        // to i*k+j) for the CG solver
-        val keyBufs = Array.fill(nG)(new scala.collection.mutable.ArrayBuffer[Long]())
-        val valBufs = Array.fill(nG)(new scala.collection.mutable.ArrayBuffer[Double]())
-        agg.gram.foreachEntry { (key, v) =>
+        // split the merged map into per-group key/value arrays (keys
+        // re-based to i*k+j), keeping the merged map's entry order
+        val keys = Array.fill(nG)(Array.newBuilder[Long])
+        val vals = Array.fill(nG)(Array.newBuilder[Double])
+        gram.foreachEntry { (key, v) =>
           val g = (key / (k.toLong * k)).toInt
-          keyBufs(g) += key - g.toLong * k * k
-          valBufs(g) += v
+          keys(g) += key - g.toLong * k * k
+          vals(g) += v
         }
-        new RoundData(nG, k, blk, null, agg.s,
-          keyBufs.map(_.toArray), valBufs.map(_.toArray))
+        Array.tabulate(nG)(g => pass(g,
+          java.util.Arrays.copyOfRange(s, g * k, (g + 1) * k), null,
+          keys(g).result(), vals(g).result()))
       }
-    bcLambda.destroy()
-    bcDone.destroy()
-    bcEta.destroy()
-    out
+    } finally {
+      bcLambda.destroy()
+      bcLinks.destroy()
+      bcDone.destroy()
+    }
   }
 
   /** Output stage shared by both solvers: one narrow pass computing
@@ -281,7 +145,7 @@ object GroupedEntropyBalance {
       lb: Double, ub: Double): DataFrame = {
     val spark = df.sparkSession
     graft.functions.GraftFunctions.register(spark)
-    val multByName = names.indices.map(g => names(g) -> mult(g).toSeq).toMap
+    val multByName = names.indices.map(g => names(g) -> mult(g)).toMap
     val bcM = spark.sparkContext.broadcast(multByName)
     val lamCol = udf { (gname: String) =>
       if (gname == null) null else bcM.value.get(gname).map(_.toSeq).orNull
@@ -302,9 +166,7 @@ object GroupedEntropyBalance {
           bcM.value.get(if (gname == null) "" else gname) match {
             case None => 1.0
             case Some(th) =>
-              var t = 0.0
-              v.foreachActive((i, x) => t += x * th(i))
-              outLink.r(t)
+              EbwAggregator.eval(EntropyBalance.toEbwRow(v, 1.0), th, outLink, th.length)._1
           }
         }
         f(col(featuresCol), col(groupCol).cast("string"))
@@ -328,39 +190,68 @@ object GroupedEntropyBalance {
     weightedOutput(df, groupCol, featuresCol, weightCol, outputCol, names, mult, lb, ub)
   }
 
+  /** Both grouped solvers' frame: checks the targets (the single
+   * solvers' check), caches the group-tagged rows, validates them with the
+   * single solvers' row check, runs `solve` on (names, rows, validation)
+   * and releases the rows however it ends. */
+  private def withGroups(
+      df: DataFrame, groupCol: String, featuresCol: String, weightCol: String,
+      targets: Map[String, Array[Double]])(
+      solve: (Array[String], RDD[EbwRow], EbwAggregator.Validated) => GroupedResult)
+      : GroupedResult = {
+    require(targets.nonEmpty)
+    val k = targets.head._2.length
+    require(targets.values.forall(_.length == k), "all groups need k moments")
+    targets.values.foreach(EntropyBalance.requireFiniteTargets)
+    val names = targets.keys.toArray.sorted
+    val rows = groupRows(df, groupCol, featuresCol, weightCol,
+      names.zipWithIndex.toMap, names.length, k)
+    try {
+      val v = EbwAggregator.validate(rows, k, names.length)
+      if (v.bad > 0) throw EntropyBalance.invalidInputs()
+      solve(names, rows, v)
+    } finally rows.unpersist(false)
+  }
+
+  /** The output weights plus per-group diagnostics. */
+  private def groupedResult(
+      df: DataFrame, groupCol: String, featuresCol: String, weightCol: String,
+      outputCol: String, names: Array[String], results: Array[GroupResult],
+      lb: Double, ub: Double): GroupedResult =
+    GroupedResult(
+      weightedOutput(df, groupCol, featuresCol, weightCol, outputCol, names,
+        results.map(_.multipliers), lb, ub),
+      names.zip(results).toMap)
+
   /** DISTRIBUTED-GRAM tier of the grouped solver: G simultaneous
    * large-k problems would hold G sparse Grams in the shared round pass
    * — the per-task LongMap and its driver merge scale with the SUM of
    * the groups' realized cross patterns, so at the single-problem
    * distributed-Gram regime (N=1e7 × k=1e5) a handful of groups exhausts
-   * the driver budget that one problem already saturates. Routing
-   * (decided by the same EbwSizing envelope as the single solver, from
-   * the TOTAL Σ nnz(nnz+1)/2 the validation pass measured): shard the
-   * groups across single-problem solves — each group's rows filter to
-   * its own cached RDD and the single solver engages its own
+   * the driver budget that one problem already saturates. When the Gram
+   * placement (EbwSizing.place, the single solver's decision, on the
+   * TOTAL Σ nnz(nnz+1)/2 the validation pass measured) says distributed,
+   * the groups shard across single-problem solves — each group's rows
+   * filter to its own cached RDD and the single solver engages its own
    * distributed-Gram CG (Gram lives as an RDD, O(k) driver traffic per
    * CG iteration, no driver ceiling) — then stitch one GroupedResult.
-   * Shards CO-SCHEDULE on a bounded pool (`options.shardParallelism`
-   * concurrent solves; Spark's scheduler interleaves their jobs, so one
-   * solve's driver-side linalg gap is another's executor time — the
-   * 4-group canary spec pins wall << G sequential solves) at the price
-   * of multiplying the single-problem O(k) driver envelope by the
-   * bound; that envelope is why the groups sharded in the first place,
-   * so the bound stays small and configurable down to 1 (the sequential
-   * round-14 behavior). Groups with no rows converge trivially
-   * (multipliers 0, ratio 1 — the shared-pass behavior). */
+   * Shards CO-SCHEDULE, min(4, groups) at a time: Spark's scheduler
+   * interleaves their jobs, so one solve's driver-side linalg gap is
+   * another's executor time (the 4-group canary spec pins wall << G
+   * sequential solves), at the price of multiplying the single-problem
+   * O(k) driver envelope by the pool size — kept small because that
+   * envelope is why the groups sharded in the first place. Groups with
+   * no rows converge trivially (multipliers 0, ratio 1 — the shared-pass
+   * behavior). */
   private def solveSharded(
       df: DataFrame, groupCol: String, featuresCol: String,
       weightCol: String, targets: Map[String, Array[Double]],
       outputCol: String, options: EbwOptions, names: Array[String],
       sumW: Array[Double], lb: Double, ub: Double): GroupedResult = {
-    require(options.shardParallelism >= 1,
-      s"shardParallelism must be >= 1: ${options.shardParallelism}")
     val k = targets(names(0)).length
-    def solveOne(name: String, g: Int): (String, GroupResult) =
-      name -> (if (sumW(g) == 0.0)
-        GroupResult(converged = true, 0, new Array[Double](k),
-          new Array[Double](k))
+    def solveOne(name: String, g: Int): GroupResult =
+      if (sumW(g) == 0.0)
+        GroupResult(converged = true, 0, new Array[Double](k), new Array[Double](k))
       else {
         EbwLog.info(s"grouped distributed-Gram shard: group '$name' " +
           s"(${g + 1}/${names.length}) via the single-problem solver")
@@ -372,33 +263,22 @@ object GroupedEntropyBalance {
         val eff =
           if (res.link.mode == Link.CLIP) res.theta.map(_ * res.link.eta)
           else res.theta
-        GroupResult(res.converged, res.nIterations, eff,
-          res.constraintViolations)
-      })
-    val par = math.max(1, math.min(options.shardParallelism, names.length))
-    val results: Map[String, GroupResult] =
-      if (par == 1)
-        names.zipWithIndex.map { case (n, g) => solveOne(n, g) }.toMap
-      else {
-        // bounded co-scheduling: each future is one independent solve
-        // (local vars only; EbwLog is synchronized; SparkContext actions
-        // are thread-safe and the scheduler interleaves their jobs)
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try {
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          Await.result(
-            Future.sequence(names.zipWithIndex.toSeq.map { case (n, g) =>
-              Future(solveOne(n, g))
-            }), Duration.Inf).toMap
-        } finally pool.shutdown()
+        GroupResult(res.converged, res.nIterations, eff, res.constraintViolations)
       }
-    val mult = names.map(n => results(n).multipliers)
-    val weighted = weightedOutput(df, groupCol, featuresCol, weightCol,
-      outputCol, names, mult, lb, ub)
-    GroupedResult(weighted, results)
+    // each future is one independent solve (local vars only; EbwLog is
+    // synchronized; SparkContext actions are thread-safe)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(4, names.length))
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutorService(pool)
+    val results =
+      try {
+        import scala.concurrent.{Await, Future}
+        import scala.concurrent.duration.Duration
+        Await.result(Future.sequence(names.indices.map(g =>
+          Future(solveOne(names(g), g)))), Duration.Inf).toArray
+      } finally pool.shutdown()
+    groupedResult(df, groupCol, featuresCol, weightCol, outputCol, names,
+      results, lb, ub)
   }
 
   /**
@@ -408,16 +288,16 @@ object GroupedEntropyBalance {
    * `outputCol` (all groups' weights in one column) plus per-group
    * diagnostics.
    *
-   * Large-k routing: below `options.denseGramMax` every round is one
-   * shared dense pass; above it the shared pass accumulates the G Grams
-   * sparsely, and when even that would exceed this driver's
-   * maxResultSize/heap envelope (EbwSizing, measured from the validation
-   * scan's total Σ nnz(nnz+1)/2 — or forced with gramMode =
-   * "distributed"), the groups auto-shard across single-problem
-   * DISTRIBUTED-Gram solves co-scheduled `options.shardParallelism` at a
-   * time ([[solveSharded]]).
-   * gramMode = "driver" keeps the shared pass and fails fast with the
-   * sized envelope error instead of OOMing mid-solve.
+   * Every round is one shared pass ([[roundPass]]) followed, per
+   * unconverged group, by the single solvers' Newton-direction solve
+   * (DriverLinalg.direction: Cholesky on the packed Gram, CG on the
+   * sparse one). Above `options.denseGramMax`, when the Gram placement
+   * the single solver uses (EbwSizing.place) says the summed sparse Grams
+   * exceed this driver's maxResultSize/heap envelope — or gramMode =
+   * "distributed" forces it — the groups shard across single-problem
+   * DISTRIBUTED-Gram solves instead ([[solveSharded]]). gramMode =
+   * "driver" keeps the shared pass and fails fast with the sized envelope
+   * error instead of OOMing mid-solve.
    */
   def entropyBalanceGrouped(
       df: DataFrame,
@@ -426,140 +306,100 @@ object GroupedEntropyBalance {
       weightCol: String,
       targets: Map[String, Array[Double]],
       outputCol: String = "weight_new",
-      options: EbwOptions = EbwOptions()): GroupedResult = {
-    require(targets.nonEmpty)
-    val k = targets.head._2.length
-    require(targets.values.forall(_.length == k), "all groups need k moments")
-    val names = targets.keys.toArray.sorted
-    val gIdx = names.zipWithIndex.toMap
-    val nG = names.length
-    val rows = prepGRows(df, groupCol, featuresCol, weightCol, gIdx, nG, k)
+      options: EbwOptions = EbwOptions()): GroupedResult =
+    withGroups(df, groupCol, featuresCol, weightCol, targets) { (names, rows, v) =>
+      val nG = names.length
+      val k = targets(names(0)).length
+      val (lb, ub) = EntropyBalance.ratioBounds(options)
+      val sharded = k > options.denseGramMax && EbwSizing.place(rows.sparkContext,
+        k, v.sumPairs, rows.getNumPartitions, options.gramMode)._2
+      if (sharded)
+        solveSharded(df, groupCol, featuresCol, weightCol, targets, outputCol,
+          options, names, v.sumW, lb, ub)
+      else {
+        val b = Array.tabulate(nG)(g => targets(names(g)).map(_ * v.sumW(g)))
+        val bscale = b.map(bg => math.max(1.0, norm2(bg)))
+        // Unified link: r = clip(exp(eta_g * t), lb, ub). Unbounded mode is
+        // lb=0, ub=inf, eta fixed at 1 (clip inert, no box on lambda);
+        // bounded/elastic mode box-projects lambda into [-1,1]^k and
+        // auto-grows each group's eta independently (SURVEY.md §3).
+        val bounded = options.bounds.isDefined
+        val etaFixed = options.eta.isDefined
+        val etas = Array.fill(nG)(if (bounded) options.eta.getOrElse(1.0) else 1.0)
+        val noDiag = new Array[Double](k)
+        val lambda = Array.fill(nG)(new Array[Double](k))
+        val converged = new Array[Boolean](nG)
+        val iters = new Array[Int](nG)
+        val ceOut = Array.fill(nG)(new Array[Double](k))
+        var round = 0
+        val maxRounds = if (bounded) options.maxStepsBounded else options.maxSteps
+        val sparseGram = k > options.denseGramMax
 
-    try {
-      val (sumW, sumPairs) = validateSumW(rows, nG, k)
-      val b = Array.tabulate(nG)(g => targets(names(g)).map(_ * sumW(g)))
-      val bscale = Array.tabulate(nG)(g => math.max(1.0, norm2(b(g))))
-
-      // Unified link: r = clip(exp(eta_g * t), lb, ub). Unbounded mode is
-      // lb=0, ub=inf, eta fixed at 1 (clip inert, no box on lambda);
-      // bounded/elastic mode box-projects lambda into [-1,1]^k and
-      // auto-grows each group's eta independently (SURVEY.md §3).
-      val bounded = options.bounds.isDefined
-      val (lbRaw, ubOpt) = options.bounds.getOrElse((0.0, None: Option[Double]))
-      val lb = math.max(0.0, lbRaw)
-      val ub = ubOpt.getOrElse(Double.PositiveInfinity)
-
-      // distributed-Gram tier: the shared sparse pass merges the SUM of
-      // all groups' Gram patterns on the driver — route to sequential
-      // per-group distributed solves when that exceeds the envelope
-      if (k > options.denseGramMax) {
-        require(Set("auto", "driver", "distributed")(options.gramMode),
-          s"gramMode must be auto|driver|distributed: ${options.gramMode}")
-        val sc = rows.sparkContext
-        val maxResult =
-          sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
-        val maxHeap = Runtime.getRuntime.maxMemory
-        val plan = EbwSizing.plan(k, sumPairs, rows.getNumPartitions,
-          maxResult, maxHeap, cores = sc.defaultParallelism)
-        val dist = options.gramMode match {
-          case "driver" =>
-            EbwSizing.requireDriverFits(plan, maxResult, maxHeap); false
-          case "distributed" => true
-          case _ => plan.distributedGram
-        }
-        EbwLog.info(s"grouped sparse Gram sizing: nG=$nG " +
-          s"sumPairs=$sumPairs mode=${if (dist) "sharded-distributed"
-            else "shared-driver"} (${plan.why})")
-        if (dist)
-          return solveSharded(df, groupCol, featuresCol, weightCol,
-            targets, outputCol, options, names, sumW, lb, ub)
-      }
-      val etaFixed = options.eta.isDefined
-      val etas = Array.fill(nG)(if (bounded) options.eta.getOrElse(1.0) else 1.0)
-
-      val lambda = Array.fill(nG)(new Array[Double](k))
-      val converged = new Array[Boolean](nG)
-      val iters = new Array[Int](nG)
-      val ceOut = Array.fill(nG)(new Array[Double](k))
-      var round = 0
-      val maxRounds = if (bounded) options.maxStepsBounded else options.maxSteps
-      val sparseGram = k > options.denseGramMax
-
-      while (round < maxRounds && !converged.forall(identity)) {
-        val rd = roundPass(rows, nG, k, lambda, etas, converged, lb, ub, sparseGram)
-        var g = 0
-        while (g < nG) {
-          if (!converged(g)) {
-            val s = rd.s(g)
-            val ce = axpy(-1.0, b(g), s)
-            ceOut(g) = ce
-            // projected gradient: pin box-saturated coordinates pushing out
-            val pg = ce.map(-_)
-            if (bounded) {
-              var j = 0
-              while (j < k) {
-                if (lambda(g)(j) >= 1.0 - 1e-12 && pg(j) > 0) pg(j) = 0.0
-                if (lambda(g)(j) <= -1.0 + 1e-12 && pg(j) < 0) pg(j) = 0.0
-                j += 1
-              }
-            }
-            val viol = norm2(pg)
-            if (viol <= options.optimalityTol * bscale(g)) {
-              // feasibility refinement: pinned with residual violation and
-              // growable eta -> retry at 10x (elastic auto-eta per group)
-              val pinnedAny = bounded && lambda(g).exists(l => math.abs(l) >= 1.0 - 1e-9)
-              if (bounded && !etaFixed && pinnedAny &&
-                  norm2(ce) > options.optimalityTol * bscale(g) && etas(g) < 1e7) {
-                val old = etas(g)
-                etas(g) *= 10.0
+        while (round < maxRounds && !converged.forall(identity)) {
+          val rd = roundPass(rows, nG, k, lambda, etas, converged, lb, ub, sparseGram)
+          var g = 0
+          while (g < nG) {
+            if (!converged(g)) {
+              val ce = axpy(-1.0, b(g), rd(g).s)
+              ceOut(g) = ce
+              // projected gradient: pin box-saturated coordinates pushing out
+              val pg = ce.map(-_)
+              if (bounded) {
                 var j = 0
                 while (j < k) {
-                  lambda(g)(j) = math.max(-1.0, math.min(1.0, lambda(g)(j) * old / etas(g)))
+                  if (lambda(g)(j) >= 1.0 - 1e-12 && pg(j) > 0) pg(j) = 0.0
+                  if (lambda(g)(j) <= -1.0 + 1e-12 && pg(j) < 0) pg(j) = 0.0
                   j += 1
                 }
-              } else converged(g) = true
-            } else {
-              val ridge = math.max(1e-8, 1e-5 * math.pow(viol / bscale(g), 0.55))
-              val d =
-                if (rd.sparse)
-                  DriverLinalg.cgSolve(k, rd.gramKeysByG(g), rd.gramValsByG(g),
-                    new Array[Double](k), pg, ridge, null)
-                else DriverLinalg.solveRidged(k, rd.gramDense(g), pg, ridge)
-              // damped full step: groups share the pass, so no individual
-              // line search — cap the step to keep exp() sane instead
-              val dn = d.map(math.abs).max
-              val cap = if (bounded) 2.0 else 30.0
-              val scale = if (dn > cap) cap / dn else 1.0
-              var j = 0
-              while (j < k) {
-                val next = lambda(g)(j) + scale * d(j)
-                lambda(g)(j) =
-                  if (bounded) math.max(-1.0, math.min(1.0, next)) else next
-                j += 1
               }
-              iters(g) += 1
-              // step-size exit (shared.py:57), guarded by a loose
-              // feasibility check as in the single unbounded solver —
-              // stops groups from spinning at the noise floor
-              if (norm2(d) * scale < options.stepTol &&
-                  norm2(ce) < 1e-3 * bscale(g)) converged(g) = true
+              val viol = norm2(pg)
+              if (viol <= options.optimalityTol * bscale(g)) {
+                // feasibility refinement: pinned with residual violation and
+                // growable eta -> retry at 10x (elastic auto-eta per group)
+                val pinnedAny = bounded && lambda(g).exists(l => math.abs(l) >= 1.0 - 1e-9)
+                if (bounded && !etaFixed && pinnedAny &&
+                    norm2(ce) > options.optimalityTol * bscale(g) && etas(g) < 1e7) {
+                  val old = etas(g)
+                  etas(g) *= 10.0
+                  var j = 0
+                  while (j < k) {
+                    lambda(g)(j) = math.max(-1.0, math.min(1.0, lambda(g)(j) * old / etas(g)))
+                    j += 1
+                  }
+                } else converged(g) = true
+              } else {
+                val ridge = math.max(1e-8, 1e-5 * math.pow(viol / bscale(g), 0.55))
+                val d = DriverLinalg.direction(rd(g), k, noDiag, pg, 1.0, ridge, null)
+                // damped full step: groups share the pass, so no individual
+                // line search — cap the step to keep exp() sane instead
+                val dn = d.map(math.abs).max
+                val cap = if (bounded) 2.0 else 30.0
+                val scale = if (dn > cap) cap / dn else 1.0
+                var j = 0
+                while (j < k) {
+                  val next = lambda(g)(j) + scale * d(j)
+                  lambda(g)(j) =
+                    if (bounded) math.max(-1.0, math.min(1.0, next)) else next
+                  j += 1
+                }
+                iters(g) += 1
+                // step-size exit (shared.py:57), guarded by a loose
+                // feasibility check as in the single unbounded solver —
+                // stops groups from spinning at the noise floor
+                if (norm2(d) * scale < options.stepTol &&
+                    norm2(ce) < 1e-3 * bscale(g)) converged(g) = true
+              }
             }
+            g += 1
           }
-          g += 1
+          round += 1
         }
-        round += 1
+        // effective multipliers are eta_g * lambda_g: r = clip(exp(x . mult))
+        groupedResult(df, groupCol, featuresCol, weightCol, outputCol, names,
+          Array.tabulate(nG)(g => GroupResult(converged(g), iters(g),
+            lambda(g).map(_ * etas(g)), ceOut(g))), lb, ub)
       }
-
-      // effective multipliers are eta_g * lambda_g: r = clip(exp(x . mult))
-      val mult = Array.tabulate(nG)(g => lambda(g).map(_ * etas(g)))
-      val weighted = weightedOutput(df, groupCol, featuresCol, weightCol,
-        outputCol, names, mult, lb, ub)
-      val results = names.indices.map { g =>
-        names(g) -> GroupResult(converged(g), iters(g), mult(g), ceOut(g))
-      }.toMap
-      GroupedResult(weighted, results)
-    } finally rows.unpersist(false)
-  }
+    }
 
   /**
    * Grouped quadratic-penalty EBW: one penalty problem
@@ -581,29 +421,15 @@ object GroupedEntropyBalance {
       options: EbwOptions = EbwOptions()): GroupedResult = {
     require(targets.nonEmpty)
     val k = targets.head._2.length
-    require(targets.values.forall(_.length == k), "all groups need k moments")
-    val pen =
-      if (penaltyParameter.length == 1) Array.fill(k)(penaltyParameter(0))
-      else penaltyParameter
-    if (pen.length != k)
-      throw new IllegalArgumentException("Penalties must be one per moment.")
-    if (!pen.forall(_ > 0.0))
-      throw new IllegalArgumentException("Penalty parameters must be strictly positive.")
+    val pen = EntropyBalance.penalties(penaltyParameter, k)
     val invP = pen.map(1.0 / _)
-    val names = targets.keys.toArray.sorted
-    val gIdx = names.zipWithIndex.toMap
-    val nG = names.length
-    val rows = prepGRows(df, groupCol, featuresCol, weightCol, gIdx, nG, k)
-
-    try {
-      val (sumW, _) = validateSumW(rows, nG, k)
-      val b = Array.tabulate(nG)(g => targets(names(g)).map(_ * sumW(g)))
-      val bscale = Array.tabulate(nG)(g => math.max(1.0, norm2(b(g))))
-      val (lbRaw, ubOpt) = options.bounds.getOrElse((0.0, None: Option[Double]))
-      val lb = math.max(0.0, lbRaw)
-      val ub = ubOpt.getOrElse(Double.PositiveInfinity)
+    withGroups(df, groupCol, featuresCol, weightCol, targets) { (names, rows, v) =>
+      val nG = names.length
+      val b = Array.tabulate(nG)(g => targets(names(g)).map(_ * v.sumW(g)))
+      val bscale = b.map(bg => math.max(1.0, norm2(bg)))
+      val (lb, ub) = EntropyBalance.ratioBounds(options)
       // penalty link: r = clip(exp(-t), lb, ub) == clip link with eta = -1;
-      // the aggregated "Gram" is then dS/dz = -G (sign handled at the solve)
+      // the aggregated "Gram" is then dS/dz = -G (sign = -1 at the solve)
       val etas = Array.fill(nG)(-1.0)
 
       val z = Array.fill(nG)(new Array[Double](k))
@@ -620,8 +446,7 @@ object GroupedEntropyBalance {
         var g = 0
         while (g < nG) {
           if (!converged(g)) {
-            val s = rd.s(g)
-            val ce = axpy(-1.0, b(g), s)
+            val ce = axpy(-1.0, b(g), rd(g).s)
             ceOut(g) = ce
             val f = new Array[Double](k)
             var i = 0
@@ -634,12 +459,7 @@ object GroupedEntropyBalance {
               i = 0
               while (i < k) { rhs(i) = -invP(i) * f(i); i += 1 }
               val ridge = math.max(1e-10, 1e-7 * fNorm / bscale(g))
-              val d =
-                if (rd.sparse)
-                  DriverLinalg.cgSolve(k, rd.gramKeysByG(g),
-                    rd.gramValsByG(g).map(-_), invP, rhs, ridge, null)
-                else DriverLinalg.solveWithDiag(k, rd.gramDense(g).map(-_),
-                  invP, rhs, ridge)
+              val d = DriverLinalg.direction(rd(g), k, invP, rhs, -1.0, ridge, null)
               val dn = d.map(math.abs).max
               val scale = if (dn > 30.0) 30.0 / dn else 1.0
               i = 0
@@ -655,15 +475,10 @@ object GroupedEntropyBalance {
         }
         round += 1
       }
-
       // ratio = clip(exp(-x . z), lb, ub): effective multipliers are -z
-      val mult = Array.tabulate(nG)(g => z(g).map(-_))
-      val weighted = weightedOutput(df, groupCol, featuresCol, weightCol,
-        outputCol, names, mult, lb, ub)
-      val results = names.indices.map { g =>
-        names(g) -> GroupResult(converged(g), iters(g), mult(g), ceOut(g))
-      }.toMap
-      GroupedResult(weighted, results)
-    } finally rows.unpersist(false)
+      groupedResult(df, groupCol, featuresCol, weightCol, outputCol, names,
+        Array.tabulate(nG)(g => GroupResult(converged(g), iters(g),
+          z(g).map(-_), ceOut(g))), lb, ub)
+    }
   }
 }

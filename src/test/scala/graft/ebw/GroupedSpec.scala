@@ -53,6 +53,72 @@ class GroupedSpec extends AnyFunSuite {
     }
   }
 
+  test("grouped round pass: each group's s and Gram are the single kernel's " +
+    "on that group's rows alone, bit for bit, packed and LongMap layouts") {
+    val rng = new scala.util.Random(7)
+    val k = 5
+    val nG = 3
+    // groups interleaved, dense and sparse row encodings, explicit zeros
+    val rows = (0 until 300).map { i =>
+      val vals = Array.fill(k)(if (rng.nextDouble() < 0.3) 0.0 else rng.nextGaussian())
+      val w0 = 0.5 + rng.nextDouble()
+      if (i % 2 == 0) EbwRow(null, vals, w0, i % nG)
+      else {
+        val idx = vals.indices.filter(j => vals(j) != 0.0 || j == 0).toArray
+        EbwRow(idx, idx.map(vals), w0, i % nG)
+      }
+    }
+    val lambda = Array.fill(nG)(Array.fill(k)(rng.nextDouble() * 0.4 - 0.2))
+    // exact, elastic and penalty links; the bounds clip some rows
+    val etas = Array(1.0, 2.5, -1.0)
+    val (lb, ub) = (0.7, 1.6)
+    val sc = spark.sparkContext
+    def bits(a: Array[Double]) = a.map(java.lang.Double.doubleToLongBits).toSeq
+    for (opts <- Seq(EbwOptions(), EbwOptions(denseGramMax = 0))) {
+      val sparseGram = k > opts.denseGramMax
+      val rd = GroupedEntropyBalance.roundPass(sc.parallelize(rows, 1), nG, k,
+        lambda, etas, new Array[Boolean](nG), lb, ub, sparseGram)
+      for (g <- 0 until nG) {
+        val mine = sc.parallelize(rows.filter(_.g == g), 1)
+        val link = Link.clip(etas(g), lb, ub)
+        if (sparseGram) {
+          val solo = EbwAggregator.runSparse(mine, k, lambda(g), link)
+          assert(bits(rd(g).s) == bits(solo.s), s"group $g s (LongMap layout)")
+          assert(rd(g).gramKeys.zip(bits(rd(g).gramVals)).toMap ==
+            solo.gramKeys.zip(bits(solo.gramVals)).toMap, s"group $g LongMap Gram")
+        } else {
+          val solo = EbwAggregator.run(mine, k, lambda(g), link)
+          assert(bits(rd(g).s) == bits(solo.s), s"group $g s (packed layout)")
+          assert(bits(rd(g).gram) == bits(solo.gram), s"group $g packed Gram")
+        }
+      }
+    }
+  }
+
+  private def invalidTargetFrame = {
+    import spark.implicits._
+    Seq(("A", Seq(1.0), 1.0), ("A", Seq(2.0), 1.0), ("B", Seq(1.5), 1.0), ("B", Seq(3.0), 1.0))
+      .toDF("grp", "feat", "w0")
+  }
+
+  test("entropyBalanceGrouped rejects NaN and infinite targets like the single solver") {
+    for (bad <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)) {
+      val e = intercept[IllegalArgumentException](
+        GroupedEntropyBalance.entropyBalanceGrouped(invalidTargetFrame,
+          "grp", "feat", "w0", Map("A" -> Array(bad), "B" -> Array(2.0))))
+      assert(e.getMessage.startsWith("Inputs include invalid values"), e.getMessage)
+    }
+  }
+
+  test("entropyBalancePenaltyGrouped rejects NaN and infinite targets like the single solver") {
+    for (bad <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)) {
+      val e = intercept[IllegalArgumentException](
+        GroupedEntropyBalance.entropyBalancePenaltyGrouped(invalidTargetFrame,
+          "grp", "feat", "w0", Map("A" -> Array(bad), "B" -> Array(2.0)), Array(2.0)))
+      assert(e.getMessage.startsWith("Inputs include invalid values"), e.getMessage)
+    }
+  }
+
   test("grouped sparse-Gram path (k > denseGramMax) matches the closed form and the dense path") {
     import spark.implicits._
     // 20 independent poststratification problems with k=550 one-hot levels:
