@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import Harness.{loadAvg1m, median}
+
 /**
  * Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
  * prints the headline JSON line LAST (compact, 4-decimal medians) with a
@@ -12,12 +14,6 @@ import org.apache.spark.sql.SparkSession
  * number 4x the way a single-shot measurement can.
  */
 object Bench {
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    val n = s.length
-    if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
-  }
-
   /** Per-query floors from BASELINE.md's committed table (`| query |
     * floor | ... |` rows) — the 2x perf criterion's denominator. Reading
     * it HERE makes a regression machine-visible in the round's own
@@ -85,22 +81,9 @@ object Bench {
     "probe_join" -> 0.3472,
     "probe_window" -> 0.3572)
 
-  /** 1-minute load average from /proc/loadavg (-1.0 where unreadable).
-    * Stamped at bench start and end so a record inflated by host
-    * contention is machine-detectable: on a 32-vCPU box an idle-run
-    * load sits near the bench's own parallelism, while a contended
-    * window shows load far above it — the recurring failure mode where
-    * the archived number ran 40% over the idle truth on identical
-    * code. */
-  private def loadAvg1m(): Double =
-    try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
-      .split("\\s+")(0).toDouble
-    catch { case e: Throwable if scala.util.control.NonFatal(e) => -1.0 }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
+    val reps = Harness.reps()
     // detail-file hygiene (round-14 finding: the unconditional fixed name
     // meant "whatever ran last" clobbered the official sweep's copy):
     // callers name the path with SPARK_GRAFT_BENCH_OUT; the default is
@@ -108,36 +91,7 @@ object Bench {
     val benchOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "bench_headline_" + new java.text.SimpleDateFormat("yyyyMMdd_HHmmss")
         .format(new java.util.Date) + ".json")
-    // SPARK_GRAFT_MASTER=local-cluster[2,16,4096] runs the same bench
-    // across a REAL executor boundary (separate JVMs, serialized task
-    // binaries, actual broadcast + shuffle transport) — the multi-JVM
-    // evidence pass; SPARK_GRAFT_JARS must then carry the packaged graft
-    // jar so executor JVMs can deserialize the closures, and the
-    // environment needs SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13
-    // (ExecutorRunner builds the executor command through the launcher,
-    // which otherwise scans for source-build directories and dies with
-    // "Cannot find any build directories").
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // r18 optimization: let AQE re-plan the OUTPUT partitioning of
-      // cached plans (off by default for historic plan-reuse
-      // conservatism). Without it every `.cache()` pin inside an
-      // operator is compiled WITHOUT AQE, so its InMemoryRelation keeps
-      // the raw shuffle-partition count and every consumer stage
-      // inherits ~32 near-empty tasks; measured on dedup_minhash_pairs:
-      // 201 -> 21 tasks, 40 s -> 3.5 s task time, 4.7 s -> 2.4 s wall.
-      // Scale-neutral: AQE coalesces to the data's real size at any
-      // corpus, so this is the same setting a production cluster wants.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_JARS").foreach(j => builder.config("spark.jars", j))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // JVM/codegen warmup outside the timed region (standard bench practice);
     // a bad data dir must still produce a JSON line (with per-query errors),
     // not a crash before any output
@@ -145,10 +99,7 @@ object Bench {
       spark.read.parquet(s"$sfDir/lineitem.parquet").count()
       spark.read.parquet(s"$sfDir/nation.parquet").count()
     } catch { case e: Throwable if scala.util.control.NonFatal(e) => () }
-    // comma-separated allowlist for iterating on a single operator locally;
-    // unset (the driver's mode) runs everything
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = Harness.only("BENCH")
     // Subset runs get ONE untimed warmup rep per query: a fresh JVM
     // benching 3 queries measures the cold-JIT of every kernel it touches
     // (~2.3x floor observed on dedup_exact), where the full sweep

@@ -27,11 +27,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *
  * Per tier it reports steps, total seconds, seconds per Newton step
  * (each step = 1 gradient pass + >= 1 line-search pass + one CG
- * solve), and convergence. JSON line per tier, PairScaling's format.
+ * solve), and convergence. JSON line per tier.
  *
  * Env: SPARK_GRAFT_EBW_TIERS = comma list of N:k pairs
  * (default "1000000:1000,1000000:10000,1000000:100000,10000000:10000"),
- * SPARK_GRAFT_CPUS.
+ * plus the [[Harness.session]] variables.
  */
 object EbwScaling {
 
@@ -92,50 +92,24 @@ object EbwScaling {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val tiers = sys.env.getOrElse("SPARK_GRAFT_EBW_TIERS",
         "1000000:1000,1000000:10000,1000000:100000,10000000:10000")
       .split(",").map(_.trim).filter(_.nonEmpty)
       .map { s => val Array(n, k) = s.split(":"); (n.toLong, k.toInt) }
-    // SPARK_GRAFT_MASTER=local-cluster[2,16,4096] replays the tiers
-    // across a REAL executor boundary (separate JVMs, serialized task
-    // closures, actual broadcast/shuffle transport) — multi-JVM exposes
-    // serialization bugs local[n] masks; SPARK_GRAFT_JARS must then
-    // carry the packaged graft jar (the Bench main's contract)
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // DELIBERATELY default driver budgets (1 GiB maxResultSize, the
-      // sbt-forked heap): since round 11 the solver's EbwSizing pre-flight
-      // sizes partitions/tree depth itself and switches to the
-      // distributed-Gram + distributed-CG mode when the merged Gram
-      // cannot land on this driver — the N=1e7 tier must converge HERE
-      // with no hand-set levers (r10 verdict item #2)
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_JARS").foreach(j => builder.config("spark.jars", j))
-    // local-cluster[n,c,MEM] sets WORKER capacity; the executor JVM heap
-    // still comes from spark.executor.memory (default 1g) — size it or
-    // every multi-JVM tier runs on 1 GiB executors
-    sys.env.get("SPARK_GRAFT_EXEC_MEM")
-      .foreach(m => builder.config("spark.executor.memory", m))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val blocks = 4
     tiers.foreach { case (n, k) =>
       val df = design(spark, n, k, blocks).cache()
       df.count() // materialize outside the timed region
       val m = targets(spark, n, k, blocks, eps = 0.05)
-      val load0 = java.nio.file.Files
-        .readString(java.nio.file.Paths.get("/proc/loadavg"))
-        .split("\\s+")(0)
+      val load0 = Harness.loadAvg1m()
       val t0 = System.nanoTime()
       val res = graft.ebw.EntropyBalance.entropyBalance(
         df, "features", "w0", m)
       val sec = (System.nanoTime() - t0) / 1e9
       val viol = math.sqrt(res.constraintViolations.map(x => x * x).sum)
       df.unpersist()
-      println(f"""{"op":"ebw_scale","n":$n,"k":$k,"nnz_row":$blocks,"steps":${res.nIterations},"sec":$sec%.2f,"sec_per_step":${sec / math.max(1, res.nIterations)}%.2f,"converged":${res.converged},"viol":$viol%.3g,"load":$load0}""")
+      println(f"""{"op":"ebw_scale","n":$n,"k":$k,"nnz_row":$blocks,"steps":${res.nIterations},"sec":$sec%.2f,"sec_per_step":${sec / math.max(1, res.nIterations)}%.2f,"converged":${res.converged},"viol":$viol%.3g,"load":$load0%.2f}""")
     }
     spark.stop()
   }

@@ -1,14 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import Harness.{copies, signCopy, vocabCopy}
 
 /**
  * sf1 tier generator — materializes an m-fold (default 10×) scale-up of
  * an existing testdata dir so the broad query surface can be BENCHED at
  * sf1 without synthesizing new-shape data (the testdata contract): each
- * copy is the sf0.1 tables under disjoint key remaps, the PairScaling
- * construction generalized to the whole star schema.
+ * copy is the sf0.1 tables under disjoint key remaps, the
+ * [[Harness]] copy-remap construction applied to the whole star schema.
  *
  * Disjointness per table (what keeps 10× input from reading as 100×
  * result-size artifacts):
@@ -30,7 +32,7 @@ import org.apache.spark.sql.functions._
  * Two shapes deliberately DENSIFY instead of staying disjoint, and the
  * sf1 readings must be read with that in mind: the orders-derived
  * graphs project keys mod 997, so a fixed 997-node space gets 10× the
- * edges (the PairScaling density sweep's regime, Σ deg² envelopes
+ * edges (the Scaling link_pred density sweep's regime, Σ deg² envelopes
  * apply); and events keep their time range, so time-bucketed
  * aggregations see 10× rows per bucket (that IS the realistic
  * scale-up: more traffic, same clock).
@@ -40,20 +42,11 @@ import org.apache.spark.sql.functions._
  */
 object ScaleUp {
 
-  private def copies(m: Int)(one: Int => DataFrame): DataFrame =
-    (0 until m).map(one).reduce(_.unionAll(_))
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/tmp/sfx1")
     val m = sys.env.getOrElse("SPARK_GRAFT_SCALE_M", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     def rd(t: String) = spark.read.parquet(s"$sfDir/$t.parquet")
     def wr(df: DataFrame, t: String): Unit =
       df.write.mode("overwrite").parquet(s"$outDir/$t.parquet")
@@ -107,14 +100,12 @@ object ScaleUp {
       .withColumn("doc_id", col("doc_id") + lit(c * 3000000L))
       .withColumn("text",
         if (c == 0) col("text")
-        else regexp_replace(col("text"), " ", s" c$c"))),
+        else vocabCopy(col("text"), c))),
       "documents")
     val emb = rd("embeddings")
     wr(copies(m)(c => emb
       .withColumn("vec_id", col("vec_id") + lit(c * 1000000L))
-      .withColumn("embedding", transform(col("embedding"),
-        (x, i) => when(pmod(hash(lit(c) * 131 + i), lit(2)) === 0, x)
-          .otherwise(-x)))),
+      .withColumn("embedding", signCopy(col("embedding"), c))),
       "embeddings")
     println(s"""{"scaled":"$outDir","m":$m}""")
     spark.stop()

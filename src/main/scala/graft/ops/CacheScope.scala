@@ -39,13 +39,6 @@ private[graft] object CacheScope {
    * owning index object, never by `Dedup`/`Similarity.unpersistAll`. */
   val Index = "index"
 
-  /** LEGACY scope: Bloom-filter broadcasts, from when
-   * [[Dedup.exactIncrementalBloom]] pinned a session-lifetime broadcast.
-   * The filter now lives inside the result plan as a foldable literal
-   * (nothing to track), so this scope stays empty; kept so
-   * `Dedup.releaseBloomFilters` remains a safe no-op. */
-  val Bloom = "bloom"
-
   private val registry =
     new java.util.WeakHashMap[
       SparkSession,
@@ -68,42 +61,13 @@ private[graft] object CacheScope {
     df
   }
 
-  private val broadcasts =
-    new java.util.WeakHashMap[
-      SparkSession,
-      scala.collection.mutable.Map[
-        String, scala.collection.mutable.Buffer[org.apache.spark.broadcast.Broadcast[_]]]]()
-
-  /** Remember an operator-created broadcast (e.g. the incremental-dedup
-   * Bloom filter) under a scope for later release — without tracking,
-   * every call would pin its broadcast on the driver and all executors
-   * for the application lifetime. */
-  def trackBroadcast(spark: SparkSession,
-      bc: org.apache.spark.broadcast.Broadcast[_],
-      scope: String = Ops): Unit = synchronized {
-    var scopes = broadcasts.get(spark)
-    if (scopes == null) {
-      scopes = scala.collection.mutable.Map.empty
-      broadcasts.put(spark, scopes)
-    }
-    scopes.getOrElseUpdate(scope, scala.collection.mutable.Buffer.empty) += bc
-  }
-
   /** Unpersist every operator-cached frame of `spark` in `scope`
-   * (non-blocking), destroy that scope's tracked broadcasts, and forget
-   * both. Safe to call at any time for CACHES (in-flight queries
-   * re-materialize lazily) — but a DESTROYED BROADCAST does not come
-   * back, which is why Bloom broadcasts live in their own scope and are
-   * never released by the routine Ops-scope call. */
+   * (non-blocking) and forget them. Safe to call at any time: in-flight
+   * queries re-materialize lazily. */
   def unpersistAll(spark: SparkSession, scope: String = Ops): Unit = synchronized {
     val scopes = registry.get(spark)
     if (scopes != null) scopes.remove(scope).foreach(_.foreach { df =>
       try df.unpersist(false)
-      catch { case scala.util.control.NonFatal(_) => () }
-    })
-    val bscopes = broadcasts.get(spark)
-    if (bscopes != null) bscopes.remove(scope).foreach(_.foreach { bc =>
-      try bc.destroy()
       catch { case scala.util.control.NonFatal(_) => () }
     })
   }

@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
  * justification — is updated with it.
  *
  * Out of scope, deliberately: the run harness mains (Bench/Verify/
- * *Scaling/ScaleUp collect RESULT summaries by design) and test sources.
+ * Scaling/ScaleUp/EbwScaling collect RESULT summaries by design) and test
+ * sources.
  */
 class DriverStateAuditSpec extends AnyFunSuite {
 
@@ -87,7 +88,7 @@ class DriverStateAuditSpec extends AnyFunSuite {
   }
 
   private val harness = Set("Bench.scala", "Verify.scala", "ScaleUp.scala",
-    "EbwScaling.scala", "GraphScaling.scala", "PairScaling.scala")
+    "EbwScaling.scala", "Scaling.scala")
 
   test("every driver-materializing call site in the library surface is " +
     "enumerated with a boundedness contract") {
@@ -115,6 +116,23 @@ class DriverStateAuditSpec extends AnyFunSuite {
     assert(drifted.isEmpty,
       "driver-materializing site counts drifted — re-audit the file and " +
         s"update its contract row: ${drifted.mkString("; ")}")
+  }
+
+  test("one session conf: the library and its mains build a SparkSession " +
+    "in exactly one place (Harness.session)") {
+    val root = new java.io.File("src/main/scala/graft")
+    assert(root.isDirectory, s"run from the repo root: $root")
+    val examples = new java.io.File(root, "examples").toPath
+    val sites = sources(root).filterNot(_.toPath.startsWith(examples))
+      .flatMap { f =>
+        val text = scala.io.Source.fromFile(f)("UTF-8").mkString
+        val n = java.util.regex.Pattern.quote("SparkSession.builder()").r
+          .findAllIn(text).length
+        Seq.fill(n)(f.getName)
+      }
+    assert(sites == Seq("Harness.scala"),
+      s"SparkSession.builder() sites outside examples/: $sites — build " +
+        "the session with Harness.session() so every main runs Bench's conf")
   }
 
   test("terminal scan statistics self-release: the Scan-scope cache " +

@@ -2109,7 +2109,6 @@ class CurationSpec extends AnyFunSuite {
         expectedItems = 10)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(raw.values.forall(_ == 0L), s"$raw")
-    Dedup.releaseBloomFilters(spark)
   }
 
   test("registrableDomain: eTLD+1 under two-label suffixes, plain TLDs, " +

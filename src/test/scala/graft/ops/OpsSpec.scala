@@ -2753,12 +2753,10 @@ class OpsSpec extends AnyFunSuite {
       hashes, expectedItems = 100000, fpp = 0.01)
     assert(outDup.count() == dupIds.count())
 
-    // routine Ops-scope release between pipeline stages must NOT destroy
-    // the bloom broadcast an unconsumed result still references...
+    // routine Ops-scope release between pipeline stages leaves an
+    // unconsumed result intact: the filter is a literal inside its plan
     Dedup.unpersistAll(spark)
     assert(out.count() == newBatch.count())
-    // ...only the dedicated handle does
-    Dedup.releaseBloomFilters(spark)
 
     // envelope fail-fast: a sizing past the maxFilterBytes ceiling
     // throws the sized, range-partition-advice error BEFORE any build
